@@ -61,14 +61,17 @@ _SHARD_ENV = "UTS_TEST_SHARD"
 _RESULT_ENV = "UTS_TEST_RESULT_FILE"
 
 # measured per-file wall seconds (r12 full -q --durations run, warm
-# warehouse) — a BALANCING hint only; files absent here weight by
-# test count. Staleness only unbalances shards, never breaks them.
+# warehouse; test_streaming.py re-measured as a single-process run of
+# the file after local sessions moved to the FileSystem-based
+# checkpoint manager) — a BALANCING hint only; files absent here
+# weight by test count. Staleness only unbalances shards, never
+# breaks them.
 _FILE_WEIGHTS = {
     "tests/test_plan_properties.py": 500.0,
     "tests/test_llm_ops.py": 480.0,
     "tests/test_sinks.py": 280.0,
     "tests/test_index_protocol.py": 190.0,
-    "tests/test_streaming.py": 170.0,
+    "tests/test_streaming.py": 180.0,
     "tests/test_corpus_ops.py": 90.0,
     "tests/test_property_model.py": 60.0,
     "tests/test_mining.py": 50.0,
@@ -97,6 +100,9 @@ def pytest_runtest_logreport(report):
         "longrepr": (
             str(report.longrepr) if report.longrepr is not None else None
         ),
+        # set by the xfail plugin: relayed so the parent counts the
+        # result as xfailed / xpassed rather than skipped / passed
+        "wasxfail": getattr(report, "wasxfail", None),
     }
     with open(path, "a") as fh:
         fh.write(json.dumps(rec) + "\n")
@@ -148,6 +154,8 @@ def _relay(session, item, rec, fallback_msg):
         start=0.0,
         stop=duration,
     )
+    if rec is not None and rec.get("wasxfail") is not None:
+        rep.wasxfail = rec["wasxfail"]
     item.ihook.pytest_runtest_logreport(report=rep)
 
 

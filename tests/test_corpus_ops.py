@@ -248,6 +248,24 @@ def test_bpe_int_kernel_matches_string_kernel():
         assert len(toks) == len(seg) and sum(cids[t] for t in toks) == sum(seg)
 
 
+def test_bpe_ids_for_rejects_duplicate_output_token():
+    """A merge whose output already has an id (a repeated merge, or one
+    re-creating a base symbol) would give two ids one token string and
+    silently collide in the packed-int table: it must raise instead."""
+    import pytest
+
+    from uts_spark.functions.bpe_pretrained import ids_for, int_pair_table
+
+    base = ("a", "b", "c")
+    assert ids_for((("a", "b"), ("ab", "c")), base) == {
+        "a": 1, "b": 2, "c": 3, "ab": 4, "abc": 5,
+    }
+    with pytest.raises(AssertionError, match="ab"):
+        ids_for((("a", "b"), ("c", "a"), ("a", "b")), base)
+    with pytest.raises(AssertionError, match="ab"):
+        int_pair_table((("a", "b"),), ("a", "b", "ab"))
+
+
 def test_bpe_pretrained_table_shape():
     """>=1024 merges, unique vocab strings, creator-before-consumer
     (every merge's components are base chars or outputs of EARLIER

@@ -356,6 +356,27 @@ def test_cc_union_find_matches_jump_and_multi_level(spark, monkeypatch):
         assert multi == jump
 
 
+def test_cc_paths_agree_on_null_endpoints_and_duplicates(spark):
+    """Every connected_components path must label the same graph: an
+    edge with a null endpoint connects nothing (node 9's only edge is
+    one), duplicate and reversed edges change nothing, and a
+    single-edge component (7, 8) keeps both its nodes."""
+    from uts_spark.functions.clustering import connected_components
+
+    df = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (None, None), (1, 2), (2, 1),
+         (3, 4), (4, 3), (7, 8), (9, None)],
+        "src long, dst long",
+    )
+    want = {(1, 1), (2, 1), (3, 3), (4, 3), (7, 7), (8, 7)}
+    for algorithm in ("uf", "jump", "auto"):
+        got = {
+            (r.node, r.component)
+            for r in connected_components(df, algorithm=algorithm).collect()
+        }
+        assert got == want, algorithm
+
+
 def test_contamination_counts_shared_distinct_shingles(spark):
     from uts_spark.functions.decontam import contamination
 

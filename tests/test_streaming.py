@@ -317,6 +317,86 @@ def test_uts_interval_agg_stream_matches_batch_grouper(spark, tmp_path):
     assert got == want
 
 
+_FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def test_local_session_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """Local sessions write streaming checkpoints through the
+    FileSystem-based manager (no forked ``readlink`` per rename)."""
+    jvm = spark._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+    assert mgr.getClass().getName() == _FS_MANAGER
+
+
+def test_cluster_masters_keep_default_checkpoint_manager(monkeypatch):
+    """Only a local master pins the manager class: cluster masters keep
+    Spark's FileContext default (atomic overwrite-rename on HDFS)."""
+    from pyspark.sql import SparkSession
+
+    from uts_spark.session import get_spark
+
+    monkeypatch.setattr(
+        SparkSession.Builder, "getOrCreate", lambda self: dict(self._options)
+    )
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    for master in ("local", "local[2]", "local[*]"):
+        assert get_spark(master=master)[key] == _FS_MANAGER, master
+    for master in ("yarn", "spark://host:7077", "k8s://https://host:443"):
+        assert key not in get_spark(master=master), master
+
+
+def test_stateful_checkpoint_keeps_every_checksum_file(spark, tmp_path):
+    """After a stateful complete-mode replay the checkpoint holds every
+    log and every integrity file the FileContext manager writes: the
+    offset/commit/source logs with Hadoop ``.N.crc`` sidecars, and per
+    state-store version ``N.delta``, Spark's ``N.delta.crc`` checksum
+    and the Hadoop sidecars of both (``.N.delta.crc``,
+    ``.N.delta.crc.crc``)."""
+    from uts_spark.streaming import uts_interval_agg_stream
+
+    src, chk = _dirs(tmp_path)
+    stream = read_parquet_stream(spark, os.path.join(src, "batch_*"), MS_SCHEMA)
+    out = uts_interval_agg_stream(
+        stream, {"n": Metric("count")}, interval_ms=200_000,
+        now_ms=1_000_000, time_col="ts_ms",
+    )
+    _feed(spark, src, [("s", 100_000, 1.0), ("s", 300_000, 2.0)], MS_SCHEMA, 1)
+    q = (
+        out.writeStream.format("memory")
+        .queryName(f"chkfiles_{uuid.uuid4().hex[:8]}")
+        .outputMode("complete").option("checkpointLocation", chk).start()
+    )
+    try:
+        q.processAllAvailable()
+        _feed(spark, src, [("s", 650_000, 3.0)], MS_SCHEMA, 2)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    for log in ("offsets", "commits", "sources/0"):
+        files = set(os.listdir(os.path.join(chk, log)))
+        assert {"0", ".0.crc", "1", ".1.crc"} <= files, log
+    stores = [
+        os.path.join(chk, "state", "0", d)
+        for d in os.listdir(os.path.join(chk, "state", "0"))
+        if d.isdigit()
+    ]
+    assert stores
+    for store in stores:
+        files = set(os.listdir(store))
+        for n in (1, 2):
+            want = {f"{n}.delta", f"{n}.delta.crc", f".{n}.delta.crc",
+                    f".{n}.delta.crc.crc"}
+            assert want <= files, (store, sorted(files))
+
+
 def test_session_agg_stream(spark, tmp_path):
     from uts_spark.streaming import session_agg_stream
 

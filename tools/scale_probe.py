@@ -47,7 +47,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SCALED = {
     "documents": ("doc_id",),
-    "events": ("event_id",),
+    "events": ("event_id", "ingest_id"),
     "lineitem": ("l_orderkey",),
     "orders": ("o_orderkey",),
 }
@@ -74,11 +74,15 @@ def build(sf_dir: str, out: str, mult: int) -> None:
             os.symlink(src, dst)
             continue
         raw = spark.read.parquet(src)
-        key = SCALED[name][0]
-        span = raw.agg(F.max(key)).collect()[0][0] + 1
+        # each key is its own id space: offset every copy by that key's
+        # own span, so copies never collide on any of them
+        keys = [k for k in SCALED[name] if k in raw.columns]
+        spans = raw.agg(*(F.max(k) + 1 for k in keys)).first()
         copies = []
         for i in range(mult):
-            c = raw.withColumn(key, F.col(key) + F.lit(i * span))
+            c = raw.withColumns(
+                {k: F.col(k) + F.lit(i * sp) for k, sp in zip(keys, spans)}
+            )
             if name == "documents":
                 rot = _AZ[i % 26:] + _AZ[: i % 26]
                 c = c.withColumn(
@@ -88,10 +92,6 @@ def build(sf_dir: str, out: str, mult: int) -> None:
                     "url",
                     F.concat(F.lit(f"c{i}-"), F.col("url")),
                 ) if "url" in raw.columns else c
-            if name == "events" and "ingest_id" in raw.columns:
-                c = c.withColumn(
-                    "ingest_id", F.col("ingest_id") + F.lit(i * span)
-                )
             copies.append(c)
         allc = copies[0]
         for c in copies[1:]:

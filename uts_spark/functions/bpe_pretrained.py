@@ -245,6 +245,7 @@ def ids_for(merges: tuple, base: tuple) -> dict[str, int]:
     table here: base symbols first, merge outputs in rank order."""
     ids = {s: i + 1 for i, s in enumerate(base)}
     for x, y in merges:
+        assert x + y not in ids, x + y
         ids[x + y] = len(ids) + 1
     return ids
 

@@ -95,8 +95,6 @@ def _uf_partition(batches):
         for x, y in zip(
             batch.column(0).to_pylist(), batch.column(1).to_pylist()
         ):
-            if x is None or y is None:
-                continue
             if x not in parent:
                 parent[x] = x
             if y not in parent:
@@ -127,7 +125,10 @@ def _uf_components(edges: DataFrame, src: str, dst: str, n_edges: int,
     """Connected components by iterated local-union-find contraction
     (module docstring). One lazy plan: level sizes derive from
     ``n_edges``, so there is no per-round action; each level is one
-    hash exchange of at most one row per node + one Arrow pass."""
+    hash exchange + one Arrow pass. Level 0 exchanges the edges; every
+    later level exchanges the star edges the previous level emitted,
+    one row per (block, node) — a node seen by several blocks appears
+    once per block."""
     t = edges.schema[src].dataType.simpleString()
     cur = edges.select(F.col(src).alias("node"), F.col(dst).alias("root"))
     p = max(1, min(n_edges // _UF_EDGES_PER_TASK + 1, width))
@@ -138,7 +139,8 @@ def _uf_components(edges: DataFrame, src: str, dst: str, n_edges: int,
         # works — correctness needs only that the LAST level is one
         # task); never a constant key (plan-audit: a constant hash key
         # is a single partition wearing a disguise — this one is
-        # data-keyed and size-bounded by design, one row per node)
+        # data-keyed and size-bounded by design, one row per
+        # (block, node) after level 0)
         cur = cur.repartition(p, "node").mapInArrow(
             _uf_partition, f"node {t}, root {t}"
         )
@@ -162,7 +164,8 @@ def connected_components(
     reachable from it (the canonical component id).
 
     ``edges`` is one row per undirected edge; isolated nodes may simply
-    be absent (callers union them back with label = own id). Returns
+    be absent (callers union them back with label = own id), and an
+    edge with a null endpoint is ignored. Returns
     ``(node, component)``. Pass ``dedupe_edges=False`` when the caller
     guarantees unique (src, dst) pairs (every LSH pair generator here
     does): min-propagation is idempotent under duplicate messages, so
@@ -180,6 +183,10 @@ def connected_components(
     union-find needs neither a convergence guard nor deduped edges)."""
     assert algorithm in ("auto", "uf", "jump")
     spark = edges.sparkSession
+    # an edge with a null endpoint connects nothing: drop it once, here,
+    # so every path below sees the same graph (pointer jumping would
+    # otherwise label a null "node", union-find would skip the edge)
+    edges = edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
     # materialize the (possibly expensive, e.g. LSH-generated) edge list
     # once — the count below is an action over it, and the jump path's
     # symmetrizing union reads it twice

@@ -10,6 +10,17 @@ the master. Key choices:
   fixed zone makes Spark and the DuckDB oracle agree bit-for-bit.
 - Arrow enabled — every pandas interchange (the few places we drop to
   ``applyInPandas``) goes through Arrow batches, not pickled rows.
+- FileSystem-based streaming checkpoints on local masters. Spark's
+  default manager goes through Hadoop ``FileContext``, which without the
+  native Hadoop library forks a ``readlink`` process for every rename
+  and status call on a ``file:`` path — hundreds of forks per stateful
+  replay (offset/commit logs, state-store deltas and their checksums).
+  A local master only ever checkpoints to ``file:``, where
+  ``FileSystem.rename`` is POSIX ``rename(2)``: atomic and replacing,
+  the same guarantee ``FileContext`` gives. Cluster masters (and
+  sessions the driver hands us, see :func:`configure_session`) keep the
+  default, because on HDFS only ``FileContext`` renames atomically over
+  an existing file.
 """
 
 from __future__ import annotations
@@ -17,6 +28,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_spark(
@@ -41,6 +57,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if master == "local" or master.startswith("local["):
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            _FS_CHECKPOINT_MANAGER,
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
