@@ -60,23 +60,22 @@ def sf_dir():
 _SHARD_ENV = "UTS_TEST_SHARD"
 _RESULT_ENV = "UTS_TEST_RESULT_FILE"
 
-# measured per-file wall seconds (r12 full -q --durations run, warm
-# warehouse; test_streaming.py re-measured as a single-process run of
-# the file after local sessions moved to the FileSystem-based
-# checkpoint manager) — a BALANCING hint only; files absent here
-# weight by test count. Staleness only unbalances shards, never
-# breaks them.
+# measured per-file seconds: the sum of each file's call durations in
+# a full sharded run (`pytest tests/ --durations=0`, four shards on a
+# 4-vCPU host, so every figure carries the same contention) — a
+# BALANCING hint only; files absent here weight by test count.
+# Staleness only unbalances shards, never breaks them.
 _FILE_WEIGHTS = {
-    "tests/test_plan_properties.py": 500.0,
-    "tests/test_llm_ops.py": 480.0,
-    "tests/test_sinks.py": 280.0,
-    "tests/test_index_protocol.py": 190.0,
-    "tests/test_streaming.py": 180.0,
-    "tests/test_corpus_ops.py": 90.0,
-    "tests/test_property_model.py": 60.0,
-    "tests/test_mining.py": 50.0,
+    "tests/test_llm_ops.py": 1330.0,
+    "tests/test_sinks.py": 980.0,
+    "tests/test_plan_properties.py": 770.0,
+    "tests/test_streaming.py": 490.0,
+    "tests/test_index_protocol.py": 360.0,
+    "tests/test_property_model.py": 90.0,
+    "tests/test_operators.py": 70.0,
+    "tests/test_corpus_ops.py": 60.0,
+    "tests/test_mining.py": 60.0,
     "tests/test_uts_goldens.py": 40.0,
-    "tests/test_operators.py": 30.0,
     "tests/test_timeseries.py": 25.0,
 }
 
@@ -122,6 +121,27 @@ def _partition(files: list[tuple[str, int]], n: int) -> list[list[str]]:
         bins[i].append(f)
         loads[i] += _FILE_WEIGHTS.get(f, 2.0 * cnt)
     return [b for b in bins if b]
+
+
+def _shard_heap(n_shards: int) -> str:
+    """Default driver heap per shard JVM: half of MemTotal split between
+    the shards, capped at 6g (an explicitly set SPARK_GRAFT_DRIVER_MEM
+    still wins). The other half is for what a heap does not count: each
+    JVM's off-heap memory (metaspace, code cache, thread stacks, direct
+    buffers) and each shard's Python workers. With MemTotal / n_shards
+    as heaps on a 16 GB host, the four JVMs reached 2.6-5.2 GB RSS
+    beside ~2.5 GB of Python workers and the OOM killer took the
+    largest JVM."""
+    cap_mb = 6 * 1024
+    try:
+        with open("/proc/meminfo") as fh:
+            total_kb = next(
+                int(line.split()[1]) for line in fh
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return f"{cap_mb}m"
+    return f"{min(cap_mb, total_kb // 1024 // (2 * n_shards))}m"
 
 
 def _relay(session, item, rec, fallback_msg):
@@ -183,6 +203,7 @@ def pytest_runtestloop(session):
     if len(bins) < 2:
         return None
 
+    heap = _shard_heap(len(bins))
     tmp = tempfile.mkdtemp(prefix="uts_shards_")
     procs = []
     try:
@@ -191,9 +212,10 @@ def pytest_runtestloop(session):
             env[_SHARD_ENV] = str(i)
             env[_RESULT_ENV] = os.path.join(tmp, f"res{i}.jsonl")
             env["UTS_SPARK_WAREHOUSE"] = os.path.join(tmp, f"wh{i}")
-            # four concurrent local[4] JVMs: cap each driver heap well
-            # below the parent default so shards coexist comfortably
-            env.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
+            # concurrent local[4] JVMs: split the machine's memory
+            # between the shards (see _shard_heap) so that heaps plus
+            # off-heap plus Python workers cannot outgrow RAM together
+            env.setdefault("SPARK_GRAFT_DRIVER_MEM", heap)
             cmd = [sys.executable, "-m", "pytest", "-q", *files]
             maxfail = cfg.getoption("maxfail", 0)
             if maxfail:

@@ -162,31 +162,6 @@ def test_incremental_dedup_quadrants(spark, sf_dir):
         assert (r.id_a, r.id_b) in full
 
 
-def test_cc_star_agrees_with_pointer_jumping(spark):
-    """The large/small-star CC (A/B challenger, SCALE.md round 5) must
-    produce exactly the pointer-jumping labels on random graphs and on
-    the worst-case chain."""
-    import random
-
-    from uts_spark.functions.clustering import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(11)
-    edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(250)]
-    for df in (
-        spark.createDataFrame(edges, "src long, dst long"),
-        spark.createDataFrame([(i, i + 1) for i in range(120)],
-                              "src long, dst long"),
-    ):
-        a = {(r.node, r.component)
-             for r in connected_components(df).collect()}
-        b = {(r.node, r.component)
-             for r in connected_components_star(df).collect()}
-        assert a == b and a
-
-
 # --- Pretrained BPE apply (round 6, VERDICT r5 #1) --------------------------
 
 def test_bpe_int_kernel_matches_string_kernel():

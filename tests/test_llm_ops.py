@@ -360,21 +360,51 @@ def test_cc_paths_agree_on_null_endpoints_and_duplicates(spark):
     """Every connected_components path must label the same graph: an
     edge with a null endpoint connects nothing (node 9's only edge is
     one), duplicate and reversed edges change nothing, and a
-    single-edge component (7, 8) keeps both its nodes."""
+    single-edge component (7, 8) keeps both its nodes. Two more
+    inputs: a random multigraph with self-loops and the 120-edge chain
+    (pointer jumping's worst case), both checked against a plain
+    Python union-find."""
+    import random
+
     from uts_spark.functions.clustering import connected_components
 
-    df = spark.createDataFrame(
+    def reference(edges):
+        parent = {}
+
+        def find(x):
+            while parent.setdefault(x, x) != x:
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            if a is None or b is None:
+                continue
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        nodes = {v for a, b in edges if a is not None and b is not None
+                 and a != b for v in (a, b)}
+        return {(v, find(v)) for v in nodes}
+
+    rng = random.Random(11)
+    graphs = [
         [(1, 2), (2, None), (None, 3), (None, None), (1, 2), (2, 1),
          (3, 4), (4, 3), (7, 8), (9, None)],
-        "src long, dst long",
-    )
-    want = {(1, 1), (2, 1), (3, 3), (4, 3), (7, 7), (8, 7)}
-    for algorithm in ("uf", "jump", "auto"):
-        got = {
-            (r.node, r.component)
-            for r in connected_components(df, algorithm=algorithm).collect()
-        }
-        assert got == want, algorithm
+        [(rng.randrange(300), rng.randrange(300)) for _ in range(250)],
+        [(i, i + 1) for i in range(120)],
+    ]
+    assert reference(graphs[0]) == {
+        (1, 1), (2, 1), (3, 3), (4, 3), (7, 7), (8, 7)
+    }
+    for edges in graphs:
+        df = spark.createDataFrame(edges, "src long, dst long")
+        want = reference(edges)
+        for algorithm in ("uf", "jump", "auto"):
+            got = {
+                (r.node, r.component)
+                for r in connected_components(df, algorithm=algorithm).collect()
+            }
+            assert got == want, algorithm
 
 
 def test_contamination_counts_shared_distinct_shingles(spark):
@@ -779,16 +809,15 @@ def test_ivf_index_probe_matches_recompute(spark, sf_dir):
 
 def test_lsh_index_probe_empty_anchors_returns_empty(spark, sf_dir, tmp_path):
     """An empty anchor set must return an empty frame, not a
-    functools.reduce TypeError (ADVICE r5): the partition filter is
+    functools.reduce TypeError (ADVICE r5): the bucket filter is
     seeded with lit(False)."""
-    from uts_spark.functions.similarity import lsh_index_probe, lsh_index_write
+    from uts_spark.functions.vindex import lsh_vindex_build, lsh_vindex_probe
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(50)
     path = str(tmp_path / "lsh_idx")
-    lsh_index_write(e, path, dim=64, planes=4, tables=2)
+    lsh_vindex_build(e, path, 64, planes=4, tables=2)
     empty = e.filter(F.col("vec_id") < 0)
-    out = lsh_index_probe(spark, path, empty, dim=64, k=5, planes=4, tables=2)
-    assert out.count() == 0
+    assert lsh_vindex_probe(spark, path, empty, k=5).count() == 0
 
 
 def test_pq_adc_rejects_non_divisible_dim(spark, sf_dir):
@@ -902,17 +931,18 @@ def test_minhash_index_append_roundtrip(spark):
     """The dedup service survives its second batch: batch-2 pairs
     against batch-1 docs exist ONLY via the appended index rows (sf0.01
     is the scale where such a pair occurs), and the flow is idempotent —
-    a second run sees the bumped manifest fingerprint, skips the
+    a second run sees the advanced manifest fingerprint, skips the
     append, and returns the identical pair set (no duplicate index rows
     from re-appending)."""
     import uts_spark.registry as reg  # registry first: import trap
-    from uts_spark.functions.dedup import index_manifest_read
+    from uts_spark.functions.vindex import vindex_config
     from uts_spark.queries.llm_ops import (
         _MIDX_MOD,
         _MIDX_REM,
         _frame_fingerprint,
         minhash_index_path,
     )
+    from uts_spark.sources.versioned import list_versions
 
     sf01 = "/root/testdata/sf0.01"
     q = reg.QUERIES["dedup_minhash_index_append_probe"]
@@ -921,30 +951,29 @@ def test_minhash_index_append_roundtrip(spark):
     second = {(r.id_new, r.id_old) for r in q(spark, sf01).collect()}
     assert first == second
 
-    # the manifest chain landed on fp(base + batch1)
+    # the chain landed on the appended stage, in exactly two commits
     docs = spark.read.parquet(f"{sf01}/documents.parquet")
     base = docs.filter(
         (F.col("doc_id") % 11 != 3) & (F.col("doc_id") % 11 != 7)
     )
-    old = docs.filter(F.col("doc_id") % 11 != 7)
-    path = minhash_index_path(
-        sf01, _frame_fingerprint(base), k=32, bands=8, n=3
-    ) + "_svc"
-    m = index_manifest_read(path)
-    assert m and m["fingerprint"] == _frame_fingerprint(old)
+    fp0 = _frame_fingerprint(base)
+    path = minhash_index_path(sf01, fp0, k=32, bands=8, n=3) + "_svc"
+    assert vindex_config(path)["fingerprint"] == fp0 + ":a1"
+    assert [m["operation"] for m in list_versions(path)][-1] == "append"
+    assert len(list_versions(path)) == 2
 
 
 def test_ivf_append_equals_frozen_centroid_rebuild(spark, sf_dir, tmp_path):
     """Probe-after-append == probe of a FULL REBUILD that froze the
     same base centroids: appending never changes where a vector would
-    have landed, it only skips re-sketching the base (VERDICT r6 #8).
-    Also pins that both probes read the persisted _centroids table
-    (emb_for_centroids=None)."""
-    from uts_spark.functions.similarity import (
-        ivf_index_append,
-        ivf_index_probe,
-        ivf_index_write,
+    have landed, it only skips re-assigning the base (VERDICT r6 #8).
+    Both probes read the centroid sidecar off their own manifest."""
+    from uts_spark.functions.vindex import (
+        ivf_vindex_append,
+        ivf_vindex_build,
+        ivf_vindex_probe,
     )
+    from uts_spark.sources.versioned import read_version
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = e.filter(F.col("vec_id") % 10 != 7)
@@ -952,21 +981,21 @@ def test_ivf_append_equals_frozen_centroid_rebuild(spark, sf_dir, tmp_path):
     anchors = e.filter(F.col("vec_id") < 5)
 
     p_app = str(tmp_path / "app")
-    ivf_index_write(base, p_app, n_cells=8)
-    ivf_index_append(spark, batch, p_app)
+    ivf_vindex_build(base, p_app, n_cells=8)
+    ivf_vindex_append(batch, p_app)
 
     p_re = str(tmp_path / "re")
-    ivf_index_write(e, p_re, n_cells=8, centroid_src=base)
+    ivf_vindex_build(e, p_re, n_cells=8, centroid_src=base)
 
     key = lambda df: {  # noqa: E731
         (r["anchor_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
         for r in df.collect()
     }
-    got = key(ivf_index_probe(spark, p_app, anchors, None, k=10, n_probe=3))
-    want = key(ivf_index_probe(spark, p_re, anchors, None, k=10, n_probe=3))
+    got = key(ivf_vindex_probe(spark, p_app, anchors, k=10, n_probe=3))
+    want = key(ivf_vindex_probe(spark, p_re, anchors, k=10, n_probe=3))
     assert got == want and got
     # and the appended index actually contains the batch rows
-    idx = spark.read.parquet(p_app)
+    idx = read_version(spark, p_app)
     assert idx.count() == e.count()
     assert idx.filter(F.col("vec_id") % 10 == 7).count() == batch.count()
 
@@ -1004,28 +1033,25 @@ def test_minhash_index_delete_erases_matches(spark):
 
 
 def test_minhash_index_delete_sweeps_emptied_partitions(spark, sf_dir, tmp_path):
-    """Deleting EVERY doc of an index must leave no live rows — the
-    emptied-directory sweep (dynamic overwrite cannot clear a partition
-    it writes zero rows into) actually fires."""
-    from uts_spark.functions.dedup import (
-        minhash_index_delete,
-        minhash_index_write,
+    """Deleting EVERY doc of an index must leave no live rows: the
+    committed version resolves zero rows and its manifest counts
+    zero, even though every dir the build wrote was touched."""
+    from uts_spark.functions.vindex import (
+        minhash_vindex_build,
+        minhash_vindex_delete,
     )
+    from uts_spark.sources.versioned import list_versions, read_version
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
     path = str(tmp_path / "idx")
-    minhash_index_write(docs, "text", "doc_id", path)
-    removed = minhash_index_delete(spark, docs, "text", "doc_id", path)
-    assert removed > 0
-    import glob
-
-    files = glob.glob(f"{path}/band=*/grp=*/*.parquet")
-    live = (
-        spark.read.parquet(path).count()
-        if files
-        else 0
+    minhash_vindex_build(docs, "text", "doc_id", path)
+    n0 = list_versions(path)[-1]["n_rows"]
+    minhash_vindex_delete(
+        spark, docs.select(F.col("doc_id").alias("id")), path
     )
-    assert live == 0, (removed, live)
+    assert n0 > 0
+    assert list_versions(path)[-1]["n_rows"] == 0
+    assert read_version(spark, path).count() == 0
 
 
 def test_lsh_append_equals_rebuild(spark, sf_dir, tmp_path):
@@ -1033,21 +1059,19 @@ def test_lsh_append_equals_rebuild(spark, sf_dir, tmp_path):
     seed-derived, so the appended index's row multiset matches a fresh
     build over the grown corpus exactly."""
     import uts_spark.registry  # noqa: F401  (registry first: import trap)
-    from uts_spark.functions.similarity import (
-        lsh_index_append,
-        lsh_index_write,
-    )
+    from uts_spark.functions.vindex import lsh_vindex_append, lsh_vindex_build
     from uts_spark.queries.llm_ops import EMB_DIM
+    from uts_spark.sources.versioned import read_version
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = e.filter(F.col("vec_id") % 10 != 7)
     batch = e.filter(F.col("vec_id") % 10 == 7)
     p_app, p_re = str(tmp_path / "a"), str(tmp_path / "r")
-    lsh_index_write(base, p_app, dim=EMB_DIM, planes=8, tables=2)
-    lsh_index_append(batch, p_app, dim=EMB_DIM, planes=8, tables=2)
-    lsh_index_write(e, p_re, dim=EMB_DIM, planes=8, tables=2)
-    a = spark.read.parquet(p_app).drop("embedding")
-    r = spark.read.parquet(p_re).drop("embedding")
+    lsh_vindex_build(base, p_app, EMB_DIM, planes=8, tables=2)
+    lsh_vindex_append(batch, p_app, EMB_DIM, planes=8, tables=2)
+    lsh_vindex_build(e, p_re, EMB_DIM, planes=8, tables=2)
+    a = read_version(spark, p_app).drop("embedding")
+    r = read_version(spark, p_re).drop("embedding")
     assert a.count() == r.count() and a.exceptAll(r).isEmpty()
 
 
@@ -1056,66 +1080,68 @@ def test_ivfpq_append_equals_frozen_quantizer_rebuild(spark, sf_dir, tmp_path):
     cells AND code arrays of appended vectors match what a rebuild
     (coarse centroids + PQ codebook both frozen from base) assigns."""
     import uts_spark.registry  # noqa: F401  (registry first: import trap)
-    from uts_spark.functions.similarity import (
-        ivfpq_index_append,
-        ivfpq_index_write,
+    from uts_spark.functions.vindex import (
+        ivfpq_vindex_append,
+        ivfpq_vindex_build,
     )
     from uts_spark.queries.llm_ops import EMB_DIM
+    from uts_spark.sources.versioned import read_version
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = e.filter(F.col("vec_id") % 10 != 7)
     batch = e.filter(F.col("vec_id") % 10 == 7)
     p_app, p_re = str(tmp_path / "a"), str(tmp_path / "r")
-    ivfpq_index_write(base, p_app, dim=EMB_DIM, n_cells=8)
-    ivfpq_index_append(spark, batch, p_app, dim=EMB_DIM)
-    ivfpq_index_write(e, p_re, dim=EMB_DIM, n_cells=8, centroid_src=base)
-    a = spark.read.parquet(p_app).select("vec_id", "cell", "codes")
-    r = spark.read.parquet(p_re).select("vec_id", "cell", "codes")
+    ivfpq_vindex_build(base, p_app, EMB_DIM, n_cells=8)
+    ivfpq_vindex_append(batch, p_app)
+    ivfpq_vindex_build(e, p_re, EMB_DIM, n_cells=8, centroid_src=base)
+    a = read_version(spark, p_app).select("vec_id", "cell", "codes")
+    r = read_version(spark, p_re).select("vec_id", "cell", "codes")
     assert a.count() == r.count() == e.count()
     assert a.exceptAll(r).isEmpty()
 
 
 def test_index_compact_preserves_probe_and_shrinks_files(spark, sf_dir, tmp_path):
     """Service lifecycle third verb: after several appends the index
-    accumulates one file per touched partition per tick; compaction
-    must shrink the file count while leaving probe results AND the
-    frozen sidecars (manifest) byte-identical."""
-    import uts_spark.registry  # noqa: F401  (registry first: import trap)
-    from uts_spark.functions.dedup import (
-        index_manifest_read,
-        index_manifest_write,
-        minhash_index_append,
-        minhash_index_probe,
-        minhash_index_write,
+    holds one delta dir per tick; compaction must collapse them into
+    one clustered dir while leaving probe results identical and the
+    config on the manifest unchanged."""
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        minhash_vindex_compact,
+        minhash_vindex_probe,
+        vindex_config,
     )
-    from uts_spark.sources.sinks import compact_partitioned
+    from uts_spark.sources.versioned import _manifest_dirs, list_versions
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     probe_batch = docs.filter(F.col("doc_id") % 10 == 9)
     old = docs.filter(F.col("doc_id") % 10 != 9)
     path = str(tmp_path / "idx")
-    minhash_index_write(
+    minhash_vindex_build(
         old.filter(F.col("doc_id") % 3 == 0), "text", "doc_id", path,
         fingerprint="seed",
     )
     for rem in (1, 2):
-        minhash_index_append(
-            old.filter(F.col("doc_id") % 3 == rem), "text", "doc_id", path
+        minhash_vindex_append(
+            old.filter(F.col("doc_id") % 3 == rem), "text", "doc_id", path,
+            fingerprint="after-appends",
         )
-    index_manifest_write(path, "after-appends", n=3, k=32, bands=8, n_grps=16)
 
     pairs = lambda: {  # noqa: E731
         (r.id_new, r.id_old)
-        for r in minhash_index_probe(
+        for r in minhash_vindex_probe(
             spark, path, probe_batch, old, "text", "doc_id"
         ).collect()
     }
     want = pairs()
-    before, after = compact_partitioned(spark, path, ["band", "grp"])
+    before = len(_manifest_dirs(list_versions(path)[-1]))
+    minhash_vindex_compact(spark, path, fingerprint="after-appends")
+    after = len(_manifest_dirs(list_versions(path)[-1]))
     assert after < before, (before, after)
     assert pairs() == want
-    m = index_manifest_read(path)
-    assert m and m["fingerprint"] == "after-appends"
+    m = vindex_config(path)
+    assert m["fingerprint"] == "after-appends" and m["bands"] == 8
 
 
 def test_privacy_generalize_dominates_suppression(spark, sf_dir):
@@ -1206,77 +1232,82 @@ def test_minhash_index_config_mismatch_raises(spark, sf_dir, tmp_path):
     raise, never silently drop pairs (ADVICE r6, medium)."""
     import pytest
 
-    from uts_spark.functions.dedup import (
-        minhash_index_probe,
-        minhash_index_write,
+    from uts_spark.functions.vindex import (
+        minhash_vindex_build,
+        minhash_vindex_probe,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
     path = str(tmp_path / "idx")
-    minhash_index_write(docs, "text", "doc_id", path, n=3, k=32, bands=8)
+    minhash_vindex_build(docs, "text", "doc_id", path, n=3, k=32, bands=8)
     with pytest.raises(ValueError, match="config mismatch"):
-        minhash_index_probe(
+        minhash_vindex_probe(
             spark, path, docs.limit(5), docs, "text", "doc_id",
             n=3, k=32, bands=4,
         )
 
 
 def test_index_compact_recovers_from_crashed_prior_run(spark, sf_dir, tmp_path):
-    """compact_partitioned re-entrancy (ADVICE r7): a prior run that
-    died BETWEEN its two renames leaves the index only at `path__old`
-    (nothing at `path`); one that died after the second rename leaves a
-    stale `__old` beside the live index. Both states must self-heal on
-    the next invocation — same probe pairs, no OSError."""
+    """A compaction that died after writing its clustered dir but
+    before its manifest commit leaves only an UNREFERENCED dir: readers
+    never see it (same probe pairs), the next compaction commits
+    normally, and orphan cleanup removes the debris."""
     import os
-    import shutil
 
     import uts_spark.registry  # noqa: F401  (registry first: import trap)
-    from uts_spark.functions.dedup import (
-        minhash_index_probe,
-        minhash_index_write,
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        minhash_vindex_compact,
+        minhash_vindex_probe,
     )
-    from uts_spark.sources.sinks import compact_partitioned
+    from uts_spark.sources.versioned import (
+        _write_delta_dir,
+        list_versions,
+        read_version,
+        remove_orphans,
+    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     probe_batch = docs.filter(F.col("doc_id") % 10 == 9)
     old = docs.filter(F.col("doc_id") % 10 != 9)
     path = str(tmp_path / "idx")
-    minhash_index_write(old, "text", "doc_id", path, fingerprint="seed")
+    minhash_vindex_build(
+        old.filter(F.col("doc_id") % 2 == 0), "text", "doc_id", path,
+        fingerprint="seed",
+    )
+    minhash_vindex_append(
+        old.filter(F.col("doc_id") % 2 == 1), "text", "doc_id", path,
+        fingerprint="seed",
+    )
     pairs = lambda: {  # noqa: E731
         (r.id_new, r.id_old)
-        for r in minhash_index_probe(
+        for r in minhash_vindex_probe(
             spark, path, probe_batch, old, "text", "doc_id"
         ).collect()
     }
     want = pairs()
 
-    # state 1: crash between rename(path, old) and rename(tmp, path)
-    os.rename(path, path + "__old")
-    assert not os.path.exists(path)
-    compact_partitioned(spark, path, ["band", "grp"])
-    assert os.path.exists(path) and not os.path.exists(path + "__old")
+    # the crashed compaction: its rewrite landed, its commit never did
+    stray = _write_delta_dir(read_version(spark, path), path)
+    assert pairs() == want and len(list_versions(path)) == 2
+    minhash_vindex_compact(spark, path, fingerprint="seed")
+    assert list_versions(path)[-1]["operation"] == "compact"
     assert pairs() == want
-
-    # state 2: crash after the second rename, before the rmtree —
-    # stale __old (superseded copy) beside the live index
-    shutil.copytree(path, path + "__old")
-    compact_partitioned(spark, path, ["band", "grp"])
-    assert not os.path.exists(path + "__old")
+    assert stray in remove_orphans(path, older_than_secs=0)
+    assert not os.path.exists(stray)
     assert pairs() == want
 
 
 def test_index_tick_pending_marker_forces_rebuild(spark, sf_dir):
-    """Append-vs-manifest atomicity (ADVICE r7): the append protocol is
-    append-files THEN bump-manifest; a crash between them must not lead
-    a re-run to re-append the batch (permanent row duplication). The
-    tick writes a _PENDING marker first — index_state() reports the
-    index untrusted while it exists, so the service lane rebuilds; and
-    a successful tick clears it."""
-    import json
-    import os
-
+    """A torn service run must never be trusted: every stage of a
+    service lane commits a known fingerprint on the manifest, and an
+    index whose fingerprint is none of them (a crashed stream leaves
+    its ``:ingesting`` fingerprint — the snapshot protocol's pending
+    marker) is rebuilt from scratch on the next run, not appended to
+    again. The rebuilt chain is exactly build + append."""
     import uts_spark.registry as reg  # registry first: import trap
-    from uts_spark.functions.dedup import index_state
+    from uts_spark.functions.vindex import vindex_config, vindex_seal
     from uts_spark.queries.llm_ops import (
         _MIDX_BANDS,
         _MIDX_K,
@@ -1287,6 +1318,7 @@ def test_index_tick_pending_marker_forces_rebuild(spark, sf_dir):
         _frame_fingerprint,
         minhash_index_path,
     )
+    from uts_spark.sources.versioned import list_versions
 
     run = lambda: sorted(  # noqa: E731
         tuple(r) for r in reg.QUERIES["dedup_minhash_index_append_probe"](
@@ -1303,24 +1335,16 @@ def test_index_tick_pending_marker_forces_rebuild(spark, sf_dir):
     fp0 = _frame_fingerprint(base)
     cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
     path = minhash_index_path(sf_dir, fp0, **cfg) + "_svc"
-    assert os.path.exists(path), path
-    # after a clean tick there is no marker and state == the manifest fp
-    assert not os.path.exists(os.path.join(path, "_PENDING.json"))
-    assert index_state(path) is not None
+    assert vindex_config(path)["fingerprint"] == fp0 + ":a1"
 
-    # simulate the torn tick: marker present, manifest stale or not —
-    # state must read None and the lane must rebuild + re-tick cleanly
-    with open(os.path.join(path, "_PENDING.json"), "w") as fh:
-        json.dump({"fingerprint": "torn"}, fh)
-    assert index_state(path) is None
-    n0 = sum(len(fs) for _, _, fs in os.walk(path))
-    got = run()
-    assert got == want
-    assert not os.path.exists(os.path.join(path, "_PENDING.json"))
-    # the rebuild did NOT double-append: file census is tick-shaped,
-    # not monotonically grown from the torn state
-    n1 = sum(len(fs) for _, _, fs in os.walk(path))
-    assert n1 <= n0 + 1, (n0, n1)
+    # simulate the torn run: the index sits at an in-flight fingerprint
+    vindex_seal(path, fp0 + ":ingesting")
+    assert len(list_versions(path)) == 3
+    assert run() == want
+    assert vindex_config(path)["fingerprint"] == fp0 + ":a1"
+    assert [m["operation"] for m in list_versions(path)] == [
+        "build", "append",
+    ]
 
 
 def test_vector_index_delete_probes_erase_physically_and_idempotent(
@@ -1328,9 +1352,10 @@ def test_vector_index_delete_probes_erase_physically_and_idempotent(
 ):
     """VERDICT r7 #1: the three vector-index erasure lanes must (a)
     return no deleted vector in any neighbor list, (b) be idempotent
-    on re-run (manifest chain), and (c) have PHYSICALLY removed the
-    erased ids from the persisted index — the GDPR point is the bytes,
-    not the query result."""
+    on re-run (fingerprint chain), and (c) have PHYSICALLY removed the
+    erased ids from the current version — the GDPR point is the
+    bytes, not the query result (older versions keep them only until
+    vacuum)."""
     import uts_spark.registry as reg  # registry first: import trap
     from uts_spark.queries.llm_ops import (
         _IVF_APP_MOD,
@@ -1338,6 +1363,7 @@ def test_vector_index_delete_probes_erase_physically_and_idempotent(
         _emb_frame_fingerprint,
         ivf_index_path,
     )
+    from uts_spark.sources.versioned import read_version
 
     for name in (
         "similarity_ann_lsh_delete_probe",
@@ -1354,12 +1380,12 @@ def test_vector_index_delete_probes_erase_physically_and_idempotent(
         )
         assert again == rows, f"{name}: delete tick not idempotent"
 
-    # physical erasure, pinned on the IVF family: the index parquet
-    # holds zero rem-7 rows after the delete tick
+    # physical erasure, pinned on the IVF family: the current version
+    # holds zero rem-7 rows after the delete commit
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     fp_full = _emb_frame_fingerprint(e)
     path = ivf_index_path(sf_dir, fp_full, n_cells=8) + "_ivfdel"
-    idx = spark.read.parquet(path)
+    idx = read_version(spark, path)
     left = idx.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM).count()
     assert left == 0, f"{left} erased rows physically survive in {path}"
     # and the erasure did not over-delete: every surviving vector is
@@ -1375,9 +1401,9 @@ def test_ivf_index_fit_monitors_drift_against_frozen_centroids(
     """VERDICT r7 #4: the service-side drift monitor. Build an IVF
     index over the base corpus, then score an UNDRIFTED batch and a
     DRIFTED batch (dyadic component shift) against the index's frozen
-    centroids via ivf_index_fit: the drifted batch must fit strictly
-    worse, and the measured 0.82-ratio policy must flag it exactly as
-    the registered monitor query does.
+    centroid sidecar via ivf_fit_stat: the drifted batch must fit
+    strictly worse, and the measured 0.82-ratio policy must flag it
+    exactly as the registered monitor query does.
 
     Pinned at sf0.01 — the corpus the SCALE.md drift table and the
     0.82 threshold were measured on. (Fit under drift is a property of
@@ -1386,27 +1412,36 @@ def test_ivf_index_fit_monitors_drift_against_frozen_centroids(
     rises — which is correct monitor behavior: data that lands near an
     existing centroid is still well represented.)"""
     import uts_spark.registry  # noqa: F401  registry first: import trap
-    from uts_spark.functions.similarity import ivf_index_fit, ivf_index_write
+    from uts_spark.functions.similarity import FIT_SCALE, ivf_fit_stat
+    from uts_spark.functions.vindex import ivf_vindex_build
     from uts_spark.queries.llm_ops import (
         _DRIFT_RECLUSTER_MILLI,
         _IVF_APP_MOD,
         _IVF_APP_REM,
         _drift_frames,
     )
+    from uts_spark.sources.versioned import list_versions
 
     sf01 = "/root/testdata/sf0.01"
     e = spark.read.parquet(f"{sf01}/embeddings.parquet")
     base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
     path = str(tmp_path / "ivf_fit_idx")
-    ivf_index_write(base, path, n_cells=8)
+    ivf_vindex_build(base, path, n_cells=8)
+    cents = spark.read.parquet(list_versions(path)[-1]["centroids_dir"])
+
+    def mean_fit(df):
+        r = ivf_fit_stat(df, cents).agg(
+            F.sum("fit_n").alias("s"), F.count(F.lit(1)).alias("n")
+        ).first()
+        return r["s"] / r["n"] / FIT_SCALE
 
     batch_same = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
     _, corpus_drifted = _drift_frames(e, 0.5)
     batch_drifted = corpus_drifted.filter(F.col("vec_id") >= 1_000_000)
 
-    base_fit = ivf_index_fit(spark, base, path)
-    fit_same = ivf_index_fit(spark, batch_same, path)
-    fit_drifted = ivf_index_fit(spark, batch_drifted, path)
+    base_fit = mean_fit(base)
+    fit_same = mean_fit(batch_same)
+    fit_drifted = mean_fit(batch_drifted)
 
     assert fit_drifted < fit_same, (fit_drifted, fit_same)
     thr = base_fit * _DRIFT_RECLUSTER_MILLI / 1000.0
@@ -1433,50 +1468,36 @@ def test_append_drift_eval_frozen_loses_recall_at_moderate_drift(spark):
 
 def test_ivf_index_recluster_restores_fresh_quantizer(spark, tmp_path):
     """The drift policy's corrective verb: build over base, append a
-    drifted batch (frozen centroids), then RECLUSTER — the rebuilt
-    index must probe exactly like a fresh build over the full corpus
-    (fresh centroids), and the centroid sidecar must have been
-    re-derived (it may now include appended vectors)."""
+    drifted batch (frozen centroids), then RECLUSTER — the index must
+    probe exactly like a fresh build over the full corpus (fresh
+    centroids), under a NEW centroid sidecar."""
     import uts_spark.registry  # noqa: F401  registry first: import trap
-    from uts_spark.functions.similarity import (
-        ivf_index_append,
-        ivf_index_probe,
-        ivf_index_recluster,
-        ivf_index_write,
+    from uts_spark.functions.vindex import (
+        ivf_vindex_append,
+        ivf_vindex_build,
+        ivf_vindex_probe,
+        ivf_vindex_recluster,
     )
-    from uts_spark.queries.llm_ops import (
-        _IVF_APP_MOD,
-        _IVF_APP_REM,
-        _drift_frames,
-    )
+    from uts_spark.queries.llm_ops import _drift_frames
+    from uts_spark.sources.versioned import list_versions
 
     e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     base, corpus = _drift_frames(e, 0.5)
     batch = corpus.filter(F.col("vec_id") >= 1_000_000)
     anchors = corpus.filter(F.col("vec_id") < 5)
 
-    # appended index (frozen base centroids), then recluster
     idx = str(tmp_path / "idx")
-    ivf_index_write(base, idx, n_cells=8)
-    ivf_index_append(spark, batch, idx)
-    fit_after = ivf_index_recluster(spark, corpus, idx, n_cells=8)
-    assert fit_after == fit_after  # a real number came back
+    ivf_vindex_build(base, idx, n_cells=8)
+    ivf_vindex_append(batch, idx)
+    c_frozen = list_versions(idx)[-1]["centroids_dir"]
+    ivf_vindex_recluster(spark, idx)
+    assert list_versions(idx)[-1]["centroids_dir"] != c_frozen
 
-    # reference: fresh one-shot build over the same corpus
     ref = str(tmp_path / "ref")
-    ivf_index_write(corpus, ref, n_cells=8)
-
-    got = sorted(
-        map(tuple, ivf_index_probe(spark, idx, anchors, None, k=10).collect())
-    )
-    want = sorted(
-        map(tuple, ivf_index_probe(spark, ref, anchors, None, k=10).collect())
-    )
+    ivf_vindex_build(corpus, ref, n_cells=8)
+    got = sorted(map(tuple, ivf_vindex_probe(spark, idx, anchors, k=10).collect()))
+    want = sorted(map(tuple, ivf_vindex_probe(spark, ref, anchors, k=10).collect()))
     assert got == want, "recluster must equal a fresh full-corpus build"
-    import os
-
-    assert not os.path.exists(idx + "__recluster_tmp")
-    assert not os.path.exists(idx + "__old")
 
 
 def test_quality_model_refit_gate_is_deterministic_and_strict():
@@ -1501,54 +1522,56 @@ def test_quality_model_refit_gate_is_deterministic_and_strict():
         assert "candidate_weights" in a
 
 
-def test_index_tick_enforces_single_writer(tmp_path):
-    """Multi-writer safety: the pending marker is O_EXCL, so a second
-    concurrent tick fails fast with IndexBusyError instead of both
-    writers interleaving appends and stomping the manifest; after the
-    first tick completes, the next one proceeds."""
+def test_index_tick_enforces_single_writer(spark, emb, tmp_path):
+    """Multi-writer safety without a lock: two writers that read the
+    same current version race one PUT-if-absent manifest — exactly one
+    commit lands and the other gets VersionConflictError WITHOUT
+    touching the chain (it re-reads and retries)."""
     import pytest
-    from uts_spark.functions.dedup import (
-        IndexBusyError,
-        index_state,
-        index_tick,
+
+    from uts_spark.functions.vindex import ivf_vindex_build
+    from uts_spark.sources.versioned import (
+        VersionConflictError,
+        _manifest_dirs,
+        commit_version,
+        list_versions,
     )
 
     idx = str(tmp_path / "idx")
-    import os
+    ivf_vindex_build(emb, idx, fingerprint="fp0", n_cells=4)
+    pm = list_versions(idx)[-1]
+    meta = {**{k: pm[k] for k in ("family", "n_cells", "centroids_dir")},
+            "dir_stats": pm["dir_stats"]}
 
-    os.makedirs(idx)
+    def commit(fp):
+        return commit_version(
+            idx, _manifest_dirs(pm), "seal", pm["version"], pm["n_rows"],
+            {**meta, "fingerprint": fp},
+        )
 
-    seen = []
-
-    def work_outer():
-        # while the outer tick holds the marker, a competitor must bounce
-        with pytest.raises(IndexBusyError):
-            index_tick(idx, "fp_competitor", lambda: seen.append("inner"))
-        seen.append("outer")
-
-    index_tick(idx, "fp1", work_outer)
-    assert seen == ["outer"], "competitor work must never have run"
-    assert index_state(idx) == "fp1"
-    index_tick(idx, "fp2", lambda: seen.append("second"))
-    assert seen == ["outer", "second"] and index_state(idx) == "fp2"
+    assert commit("fp_first") == 1
+    with pytest.raises(VersionConflictError):
+        commit("fp_competitor")
+    chain = list_versions(idx)
+    assert [m["version"] for m in chain] == [0, 1]
+    assert chain[-1]["fingerprint"] == "fp_first"
 
 
 def test_index_version_pinned_reads_and_reset_semantics(spark, tmp_path):
-    """Round 8 time travel: (a) a version-0-pinned probe of an
-    appended index equals a probe of the never-appended index; (b) the
-    replayed idempotent append does not duplicate its history line;
-    (c) erasure appends a RESET census and older pins raise."""
-    import os
-
+    """Time travel on the band index: (a) a version-0-pinned probe of
+    an appended index equals a probe of the never-appended index; (b)
+    a replayed batch-keyed append commits nothing; (c) erasure commits
+    a new version while older pins keep resolving their own dirs —
+    until vacuum expires them, after which a pin raises."""
     import pytest
-    from uts_spark.functions.dedup import (
-        index_files_at,
-        index_history_versions,
-        minhash_index_append_idempotent,
-        minhash_index_delete,
-        minhash_index_probe,
-        minhash_index_write,
+
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        minhash_vindex_delete,
+        minhash_vindex_probe,
     )
+    from uts_spark.sources.versioned import list_versions, vacuum
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     base = docs.filter(F.col("doc_id") % 11 == 0)
@@ -1557,176 +1580,131 @@ def test_index_version_pinned_reads_and_reset_semantics(spark, tmp_path):
     cfg = dict(n=3, k=16, bands=4)
 
     idx = str(tmp_path / "idx")
-    minhash_index_write(base, "text", "doc_id", idx, fingerprint="f0", **cfg)
+    minhash_vindex_build(base, "text", "doc_id", idx, fingerprint="f0", **cfg)
     ref = str(tmp_path / "ref")  # never-appended twin
-    minhash_index_write(base, "text", "doc_id", ref, fingerprint="f0", **cfg)
+    minhash_vindex_build(base, "text", "doc_id", ref, fingerprint="f0", **cfg)
 
-    minhash_index_append_idempotent(b1, "text", "doc_id", idx, 0, **cfg)
-    # replay the same epoch: history must not grow a duplicate line
-    minhash_index_append_idempotent(b1, "text", "doc_id", idx, 0, **cfg)
-    recs = index_history_versions(idx)
-    assert [r["version"] for r in recs] == [0, 1]
+    minhash_vindex_append(b1, "text", "doc_id", idx, batch_id=0, **cfg)
+    minhash_vindex_append(b1, "text", "doc_id", idx, batch_id=0, **cfg)
+    assert [m["version"] for m in list_versions(idx)] == [0, 1]
 
     def probe(path, old, **kw):
-        return sorted(
-            map(
-                tuple,
-                minhash_index_probe(
-                    spark, path, b2, old, "text", "doc_id",
-                    threshold=0.3, **cfg, **kw,
-                ).collect(),
-            )
-        )
+        return sorted(map(tuple, minhash_vindex_probe(
+            spark, path, b2, old, "text", "doc_id",
+            threshold=0.3, **cfg, **kw,
+        ).collect()))
 
-    pinned0 = probe(idx, base, version=0)
-    never = probe(ref, base)
-    assert pinned0 == never, "version-0 pin must hide the appended tick"
+    assert probe(idx, base, version=0) == probe(ref, base), (
+        "version-0 pin must hide the appended tick"
+    )
     both = docs.filter(F.col("doc_id") % 11 <= 1)
     assert probe(idx, both, version=1) == probe(idx, both)
 
-    # erasure invalidates earlier pins
-    n_files_before = len(index_files_at(idx, 1))
-    minhash_index_delete(spark, b1, "text", "doc_id", idx, **cfg)
-    recs = index_history_versions(idx)
-    assert recs[-1]["reset"] and recs[-1]["version"] == 2
-    with pytest.raises(ValueError, match="predates the rewrite"):
-        index_files_at(idx, 1)
-    assert len(index_files_at(idx, 2)) <= n_files_before
-    assert os.path.exists(idx)
+    minhash_vindex_delete(
+        spark, b1.select(F.col("doc_id").alias("id")), idx, **cfg
+    )
+    assert list_versions(idx)[-1]["version"] == 2
+    assert probe(idx, both, version=1) == probe(idx, both, version=1)
+    vacuum(idx, keep_last=1)
+    with pytest.raises(ValueError, match="not found"):
+        probe(idx, both, version=1)
+    assert probe(idx, base) == probe(ref, base)
 
 
 def test_ivf_append_idempotent_replay_converges(spark, tmp_path):
-    """The ANN sibling of the dedup exactly-once append (shared
-    staged-publish kernel): a replayed batch id converges to the same
-    physical index as a single plain append — no duplicated vectors,
-    batch-keyed file names."""
-    import glob
-    import os
-
-    from uts_spark.functions.similarity import (
-        ivf_index_append,
-        ivf_index_append_idempotent,
-        ivf_index_write,
-    )
+    """Exactly-once IVF append: a replayed batch id commits nothing
+    (its key rides on the committed manifest), so the index converges
+    to the same rows as a single plain append — no duplicated
+    vectors."""
+    from uts_spark.functions.vindex import ivf_vindex_append, ivf_vindex_build
+    from uts_spark.sources.versioned import list_versions, read_version
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     base = e.filter(F.col("vec_id") % 10 != 7)
     batch = e.filter(F.col("vec_id") % 10 == 7)
 
     p_plain, p_idem = str(tmp_path / "p"), str(tmp_path / "i")
-    ivf_index_write(base, p_plain, n_cells=8)
-    ivf_index_write(base, p_idem, n_cells=8)
-    ivf_index_append(spark, batch, p_plain)
-    ivf_index_append_idempotent(spark, batch, p_idem, 0)
-    ivf_index_append_idempotent(spark, batch, p_idem, 0)  # replay
+    ivf_vindex_build(base, p_plain, n_cells=8)
+    ivf_vindex_build(base, p_idem, n_cells=8)
+    ivf_vindex_append(batch, p_plain)
+    v1 = ivf_vindex_append(batch, p_idem, batch_id=0)
+    v2 = ivf_vindex_append(batch, p_idem, batch_id=0)  # replay
+    assert v1 == v2 == 1 and len(list_versions(p_idem)) == 2
 
     cols = ["vec_id", "cell"]
-    a = sorted(map(tuple, spark.read.parquet(p_plain).select(*cols).collect()))
-    b = sorted(map(tuple, spark.read.parquet(p_idem).select(*cols).collect()))
+    a = sorted(map(tuple, read_version(spark, p_plain).select(*cols).collect()))
+    b = sorted(map(tuple, read_version(spark, p_idem).select(*cols).collect()))
     assert a == b, "replayed idempotent append diverged from plain append"
-    pub = glob.glob(os.path.join(p_idem, "cell=*", "b0-*.parquet"))
-    assert pub, "batch-keyed publish names missing"
-    assert not os.path.exists(os.path.join(p_idem, "_staging", "b0"))
 
 
 def test_lsh_ivfpq_exactly_once_and_version_pins(spark, tmp_path):
-    """Round 8 completes the service matrix across all four persisted
-    families: LSH and IVF-PQ get the same batch-id-keyed exactly-once
-    append (replay converges to the plain append's rows) and — for
-    LSH — version-pinned probes (v0 hides the appended tick; a delete
-    resets the history so older pins raise)."""
-    import os
-
-    import pytest
+    """The service matrix across the vector families: LSH and IVF-PQ
+    get the same batch-keyed exactly-once append (a replay converges
+    to the plain append's rows) and version-pinned probes (v0 hides
+    the appended tick; a later erasure leaves the v1 pin readable)."""
     import uts_spark.registry  # noqa: F401  registry first: import trap
-    from uts_spark.functions.dedup import (
-        index_files_at,
-        index_history_versions,
-    )
-    from uts_spark.functions.similarity import (
-        ivfpq_index_append,
-        ivfpq_index_append_idempotent,
-        ivfpq_index_write,
-        lsh_index_append,
-        lsh_index_append_idempotent,
-        lsh_index_delete,
-        lsh_index_probe,
-        lsh_index_write,
+    from uts_spark.functions.vindex import (
+        ivfpq_vindex_append,
+        ivfpq_vindex_build,
+        lsh_vindex_append,
+        lsh_vindex_build,
+        lsh_vindex_delete,
+        lsh_vindex_probe,
     )
     from uts_spark.queries.llm_ops import EMB_DIM
+    from uts_spark.sources.versioned import list_versions, read_version
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     base = e.filter(F.col("vec_id") % 10 != 7)
     batch = e.filter(F.col("vec_id") % 10 == 7)
-    anchors = e.filter(F.col("vec_id") < 3)
+    anchors = e.filter(F.col("vec_id") < 5)
+    cfg = dict(planes=8, tables=2)
 
-    # --- LSH: exactly-once + version pins ---
-    lp, li = str(tmp_path / "lp"), str(tmp_path / "li")
-    lsh_index_write(base, lp, dim=EMB_DIM, planes=4, tables=2)
-    lsh_index_write(base, li, dim=EMB_DIM, planes=4, tables=2)
-    lsh_index_append(batch, lp, dim=EMB_DIM, planes=4, tables=2)
-    lsh_index_append_idempotent(batch, li, EMB_DIM, 0, planes=4, tables=2)
-    lsh_index_append_idempotent(batch, li, EMB_DIM, 0, planes=4, tables=2)
-    cols = ["vec_id", "table", "bucket"]
-    a = sorted(map(tuple, spark.read.parquet(lp).select(*cols).collect()))
-    b = sorted(map(tuple, spark.read.parquet(li).select(*cols).collect()))
-    assert a == b, "LSH replayed idempotent append diverged"
-    assert [r["version"] for r in index_history_versions(li)] == [0, 1]
+    pl, ref = str(tmp_path / "lsh"), str(tmp_path / "lsh_ref")
+    lsh_vindex_build(base, pl, EMB_DIM, **cfg)
+    lsh_vindex_build(base, ref, EMB_DIM, **cfg)
+    for _ in range(2):
+        lsh_vindex_append(batch, pl, EMB_DIM, batch_id=0, **cfg)
+    assert len(list_versions(pl)) == 2
 
-    def lprobe(path, **kw):
-        return sorted(
-            map(
-                tuple,
-                lsh_index_probe(
-                    spark, path, anchors, dim=EMB_DIM, k=5,
-                    planes=4, tables=2, **kw,
-                ).collect(),
-            )
-        )
+    def probe(path, **kw):
+        return sorted(map(tuple, lsh_vindex_probe(
+            spark, path, anchors, k=10, **kw
+        ).collect()))
 
-    ref = str(tmp_path / "lref")
-    lsh_index_write(base, ref, dim=EMB_DIM, planes=4, tables=2)
-    assert lprobe(li, version=0) == lprobe(ref), "v0 pin must hide the tick"
-    assert lprobe(li, version=1) == lprobe(li)
+    assert probe(pl, version=0) == probe(ref)
+    full = probe(pl)
+    lsh_vindex_delete(spark, batch.select("vec_id"), pl)
+    assert probe(pl, version=1) == full
+    assert probe(pl) == probe(ref)
 
-    lsh_index_delete(spark, batch, li, dim=EMB_DIM, planes=4, tables=2)
-    assert index_history_versions(li)[-1]["reset"]
-    with pytest.raises(ValueError, match="predates the rewrite"):
-        index_files_at(li, 1)
-
-    # --- IVF-PQ: exactly-once append replay converges ---
-    pp, pi = str(tmp_path / "pp"), str(tmp_path / "pi")
-    ivfpq_index_write(base, pp, dim=EMB_DIM, n_cells=8)
-    ivfpq_index_write(base, pi, dim=EMB_DIM, n_cells=8)
-    ivfpq_index_append(spark, batch, pp, dim=EMB_DIM)
-    ivfpq_index_append_idempotent(spark, batch, pi, EMB_DIM, 0)
-    ivfpq_index_append_idempotent(spark, batch, pi, EMB_DIM, 0)
+    pp, pi = str(tmp_path / "pq_plain"), str(tmp_path / "pq_idem")
+    ivfpq_vindex_build(base, pp, EMB_DIM, n_cells=8)
+    ivfpq_vindex_build(base, pi, EMB_DIM, n_cells=8)
+    ivfpq_vindex_append(batch, pp)
+    for _ in range(2):
+        ivfpq_vindex_append(batch, pi, batch_id=0)
     cols = ["vec_id", "cell", "codes"]
-    a = sorted(map(tuple, spark.read.parquet(pp).select(*cols).collect()))
-    b = sorted(map(tuple, spark.read.parquet(pi).select(*cols).collect()))
+    a = sorted(map(tuple, read_version(spark, pp).select(*cols).collect()))
+    b = sorted(map(tuple, read_version(spark, pi).select(*cols).collect()))
     assert a == b, "IVF-PQ replayed idempotent append diverged"
-    assert [r["version"] for r in index_history_versions(pi)] == [0, 1]
-    assert not os.path.exists(os.path.join(pi, "_staging", "b0"))
+    assert [m["version"] for m in list_versions(pi)] == [0, 1]
 
 
 def test_ivfpq_recluster_refreshes_both_quantizers(spark, tmp_path):
     """The IVF-PQ corrective verb: after appending a drifted batch
     against frozen quantizers, recluster rebuilds with fresh centroids
-    AND a fresh codebook — probe equals a fresh one-shot build over
-    the grown corpus, and the post-rebuild corpus distortion (the new
-    monitor reference) is finite and below the drifted batch's
-    distortion against the OLD codebook."""
-    import os
-
+    AND a fresh codebook (two new sidecars on the manifest) — the
+    probe equals a fresh one-shot build over the grown corpus."""
     import uts_spark.registry  # noqa: F401  registry first: import trap
-    from uts_spark.functions.similarity import (
-        ivfpq_index_append,
-        ivfpq_index_distortion,
-        ivfpq_index_probe,
-        ivfpq_index_recluster,
-        ivfpq_index_write,
+    from uts_spark.functions.vindex import (
+        ivfpq_vindex_append,
+        ivfpq_vindex_build,
+        ivfpq_vindex_probe,
+        ivfpq_vindex_recluster,
     )
     from uts_spark.queries.llm_ops import EMB_DIM, _drift_frames
+    from uts_spark.sources.versioned import list_versions
 
     e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     base, corpus = _drift_frames(e, 0.5)
@@ -1734,22 +1712,58 @@ def test_ivfpq_recluster_refreshes_both_quantizers(spark, tmp_path):
     anchors = corpus.filter(F.col("vec_id") < 5)
 
     idx = str(tmp_path / "idx")
-    ivfpq_index_write(base, idx, dim=EMB_DIM, n_cells=8)
-    ivfpq_index_append(spark, batch, idx, dim=EMB_DIM)
-    drifted_dist = ivfpq_index_distortion(spark, batch, idx, dim=EMB_DIM)
-
-    new_ref = ivfpq_index_recluster(spark, corpus, idx, dim=EMB_DIM)
-    assert new_ref == new_ref and new_ref < drifted_dist
+    ivfpq_vindex_build(base, idx, EMB_DIM, n_cells=8)
+    ivfpq_vindex_append(batch, idx)
+    frozen = list_versions(idx)[-1]
+    ivfpq_vindex_recluster(spark, idx)
+    fresh = list_versions(idx)[-1]
+    assert fresh["centroids_dir"] != frozen["centroids_dir"]
+    assert fresh["codebook_dir"] != frozen["codebook_dir"]
 
     ref = str(tmp_path / "ref")
-    ivfpq_index_write(corpus, ref, dim=EMB_DIM, n_cells=8)
-    got = sorted(map(tuple, ivfpq_index_probe(
-        spark, idx, anchors, None, dim=EMB_DIM, k=10).collect()))
-    want = sorted(map(tuple, ivfpq_index_probe(
-        spark, ref, anchors, None, dim=EMB_DIM, k=10).collect()))
+    ivfpq_vindex_build(corpus, ref, EMB_DIM, n_cells=8)
+    got = sorted(map(tuple, ivfpq_vindex_probe(
+        spark, idx, anchors, k=10).collect()))
+    want = sorted(map(tuple, ivfpq_vindex_probe(
+        spark, ref, anchors, k=10).collect()))
     assert got == want, "recluster must equal a fresh full-corpus build"
-    assert not os.path.exists(idx + "__recluster_tmp")
-    assert not os.path.exists(idx + "__old")
+
+
+def test_compaction_keeps_version_pins_readable(spark, tmp_path):
+    """VERDICT r8 #1 (compaction x time travel): compaction is an
+    ordinary rewrite commit, so (a) a probe pinned at the compaction's
+    version is row-identical to an unpinned probe, and (b) pins at
+    pre-compaction versions keep resolving their own dirs (same rows
+    as before the compaction) until vacuum — never a raw
+    PATH_NOT_FOUND."""
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        minhash_vindex_compact,
+        minhash_vindex_probe,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    base = docs.filter(F.col("doc_id") % 11 == 0)
+    b1 = docs.filter(F.col("doc_id") % 11 == 1)
+    b2 = docs.filter(F.col("doc_id") % 11 == 2)
+    old = docs.filter(F.col("doc_id") % 11 <= 1)
+    cfg = dict(n=3, k=16, bands=4)
+    idx = str(tmp_path / "idx")
+    minhash_vindex_build(base, "text", "doc_id", idx, **cfg)
+    minhash_vindex_append(b1, "text", "doc_id", idx, batch_id=0, **cfg)
+
+    def probe(**kw):
+        return sorted(map(tuple, minhash_vindex_probe(
+            spark, idx, b2, old, "text", "doc_id", threshold=0.3,
+            **cfg, **kw,
+        ).collect()))
+
+    pre = {v: probe(version=v) for v in (0, 1)}
+    v = minhash_vindex_compact(spark, idx, **cfg)
+    assert v == 2
+    assert probe(version=2) == probe() == pre[1]
+    assert probe(version=0) == pre[0] and probe(version=1) == pre[1]
 
 
 def test_facility_location_gains_monotone_and_distinct(spark):
@@ -1809,163 +1823,75 @@ def test_dsir_select_prefers_target_like_docs(spark):
 # history carry, realized-pool coreset guard, empty-census pin errors.
 
 
-def test_compaction_resets_version_history(spark, tmp_path):
-    """VERDICT r8 #1 (the one defect found): compaction rewrites every
-    data file under new part-* names, so it must append a RESET census
-    line exactly like the erasure path — (a) a pinned probe at the
-    post-compaction version is row-identical to an unpinned probe,
-    (b) a pinned probe at any pre-compaction version raises the
-    designed 'predates the rewrite' ValueError, never PATH_NOT_FOUND."""
-    from uts_spark.functions.dedup import (
-        index_files_at,
-        index_history_versions,
-        minhash_index_append_idempotent,
-        minhash_index_probe,
-        minhash_index_write,
-    )
-    from uts_spark.sources.sinks import compact_partitioned
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    base = docs.filter(F.col("doc_id") % 11 == 0)
-    b1 = docs.filter(F.col("doc_id") % 11 == 1)
-    b2 = docs.filter(F.col("doc_id") % 11 == 2)
-    cfg = dict(n=3, k=16, bands=4)
-
-    idx = str(tmp_path / "idx")
-    minhash_index_write(base, "text", "doc_id", idx, fingerprint="f0", **cfg)
-    minhash_index_append_idempotent(b1, "text", "doc_id", idx, 0, **cfg)
-    assert [r["version"] for r in index_history_versions(idx)] == [0, 1]
-
-    old_docs = docs.filter(F.col("doc_id") % 11 <= 1)
-
-    def probe(**kw):
-        return sorted(
-            map(
-                tuple,
-                minhash_index_probe(
-                    spark, idx, b2, old_docs, "text", "doc_id",
-                    threshold=0.3, **cfg, **kw,
-                ).collect(),
-            )
-        )
-
-    want = probe()
-    compact_partitioned(spark, idx, ["band", "grp"])
-
-    recs = index_history_versions(idx)
-    assert recs[-1]["version"] == 2 and recs[-1]["reset"]
-    assert recs[-1].get("compaction") is True
-    # (a) pin at the post-compaction version == unpinned
-    assert probe(version=2) == probe() == want
-    # (b) pre-compaction pins fail with the DESIGNED error
-    for v in (0, 1):
-        with pytest.raises(ValueError, match="predates the rewrite"):
-            index_files_at(idx, v)
-
-
 def test_batch_id_reuse_after_reset_is_epoch_keyed(spark, tmp_path):
-    """ADVICE r8 (medium): a batch_id REUSED after a reset (a fresh
-    stream restarting at bid 0 post-compaction/-erasure) must (a) open
-    a NEW history line instead of rewriting the dead pre-reset one,
-    and (b) publish under an epoch-qualified name so the staged
-    kernel's sweep cannot delete the earlier generation's surviving
-    b0-* files out of untouched partitions."""
-    import glob
-    import os
-
-    from uts_spark.functions.dedup import (
-        index_epoch,
-        index_files_at,
-        index_history_versions,
-        minhash_index_append_idempotent,
-        minhash_index_write,
+    """ADVICE r8 (medium): a batch_id REUSED after a rewrite (a fresh
+    stream restarting at bid 0 post-compaction) opens a NEW
+    exactly-once epoch — its batch commits instead of being mistaken
+    for the pre-rewrite batch 0 — while a replay within the new epoch
+    still commits nothing."""
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        minhash_vindex_compact,
     )
-    from uts_spark.sources.sinks import compact_partitioned
+    from uts_spark.sources.versioned import list_versions, read_version
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    base = docs.filter(F.col("doc_id") % 11 == 0)
-    b1 = docs.filter(F.col("doc_id") % 11 == 1)
-    b2 = docs.filter(F.col("doc_id") % 11 == 2)
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     cfg = dict(n=3, k=16, bands=4)
-
     idx = str(tmp_path / "idx")
-    minhash_index_write(base, "text", "doc_id", idx, fingerprint="f0", **cfg)
-    assert index_epoch(idx) == 0
-    minhash_index_append_idempotent(b1, "text", "doc_id", idx, 0, **cfg)
-    # compaction's reset lands at version 2 -> epoch 2 (epochs are
-    # keyed by the reset VERSION so they survive a history vacuum)
-    compact_partitioned(spark, idx, ["band", "grp"])
-    assert index_epoch(idx) == 2
-
-    rows_before = spark.read.parquet(idx).count()
-    # the restarted stream reuses batch_id 0 with DIFFERENT docs
-    minhash_index_append_idempotent(b2, "text", "doc_id", idx, 0, **cfg)
-    recs = index_history_versions(idx)
-    # (a) a NEW line at version 3 — the dead pre-reset bid-0 line
-    # (version 1) is untouched
-    assert [r["version"] for r in recs] == [0, 1, 2, 3]
-    assert recs[-1]["batch_id"] == 0 and not recs[-1]["reset"]
-    assert recs[1]["batch_id"] == 0 and recs[1]["version"] == 1
-    # (b) epoch-qualified publish names; no compacted file was swept
-    pub = glob.glob(os.path.join(idx, "band=*", "grp=*", "e2b0-*.parquet"))
-    assert pub, "epoch-2 publish names missing"
-    assert spark.read.parquet(idx).count() > rows_before
-    # the current-version census covers compacted files + the new tick
-    latest = index_files_at(idx, 3)
-    assert set(os.path.join(idx, r) for r in recs[-1]["files"]) <= set(latest)
-    assert len(latest) > len(index_files_at(idx, 2))
-
-    # replaying the SAME (epoch, batch_id) still converges: no new line
-    minhash_index_append_idempotent(b2, "text", "doc_id", idx, 0, **cfg)
-    assert [r["version"] for r in index_history_versions(idx)] == [0, 1, 2, 3]
-
-
-def test_ivf_recluster_carries_version_history(spark, tmp_path):
-    """ADVICE r8 (medium): re-cluster rebuilds the index from scratch,
-    but the version chain must CONTINUE — a reader holding a
-    pre-recluster pin (including version 0) gets the designed
-    'predates the rewrite' error instead of silently resolving onto
-    the rebuilt files, and the rebuild occupies max(version)+1."""
-    from uts_spark.functions.dedup import (
-        index_files_at,
-        index_history_versions,
+    minhash_vindex_build(
+        docs.filter(F.col("doc_id") % 11 == 0), "text", "doc_id", idx, **cfg
     )
-    from uts_spark.functions.similarity import (
-        ivf_index_append_idempotent,
-        ivf_index_probe,
-        ivf_index_recluster,
-        ivf_index_write,
+    minhash_vindex_append(
+        docs.filter(F.col("doc_id") % 11 == 1), "text", "doc_id", idx,
+        batch_id=0, **cfg,
     )
+    minhash_vindex_compact(spark, idx, **cfg)
+    n_before = read_version(spark, idx).count()
+    b2 = docs.filter(F.col("doc_id") % 11 == 2)
+    v = minhash_vindex_append(b2, "text", "doc_id", idx, batch_id=0, **cfg)
+    assert v == 3, "reused batch id after a rewrite must commit"
+    assert minhash_vindex_append(
+        b2, "text", "doc_id", idx, batch_id=0, **cfg
+    ) == 3
+    keys = [m.get("batch_key") for m in list_versions(idx)]
+    assert keys[1] != keys[3] and keys[3] is not None
+    n_b2 = read_version(spark, idx).count() - n_before
+    assert n_b2 > 0 and read_version(spark, idx).count() == n_before + n_b2
 
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    base = e.filter(F.col("vec_id") % 10 != 7)
-    batch = e.filter(F.col("vec_id") % 10 == 7)
-    anchors = e.filter(F.col("vec_id") < 3)
 
-    idx = str(tmp_path / "ivf")
-    ivf_index_write(base, idx, n_cells=8)
-    ivf_index_append_idempotent(spark, batch, idx, 0)
-    assert [r["version"] for r in index_history_versions(idx)] == [0, 1]
+def test_ivf_recluster_carries_version_history(spark, emb, tmp_path):
+    """ADVICE r8 (medium): recluster rebuilds the rows and the
+    quantizer, but the version chain CONTINUES — the recluster
+    occupies max(version)+1, and a reader holding a pre-recluster pin
+    (including version 0) resolves that version's own rows and
+    centroid sidecar, never the rebuilt ones."""
+    from uts_spark.functions.vindex import (
+        ivf_vindex_append,
+        ivf_vindex_build,
+        ivf_vindex_probe,
+        ivf_vindex_recluster,
+    )
+    from uts_spark.sources.versioned import list_versions
 
-    ivf_index_recluster(spark, e, idx, n_cells=8)
-    recs = index_history_versions(idx)
-    assert [r["version"] for r in recs] == [0, 1, 2]
-    assert recs[-1]["reset"] and recs[-1].get("recluster") is True
-    for v in (0, 1):
-        with pytest.raises(ValueError, match="predates the rewrite"):
-            index_files_at(idx, v)
+    base = emb.filter(F.col("vec_id") % 10 != 7)
+    batch = emb.filter(F.col("vec_id") % 10 == 7)
+    anchors = emb.filter(F.col("vec_id") < 5)
+    idx, ref = str(tmp_path / "idx"), str(tmp_path / "ref")
+    ivf_vindex_build(base, idx, n_cells=8)
+    ivf_vindex_build(base, ref, n_cells=8)
+    ivf_vindex_append(batch, idx)
+    assert ivf_vindex_recluster(spark, idx) == 2
+    chain = list_versions(idx)
+    assert [m["version"] for m in chain] == [0, 1, 2]
+    assert chain[0]["centroids_dir"] != chain[2]["centroids_dir"]
 
-    def probe(**kw):
-        return sorted(
-            map(
-                tuple,
-                ivf_index_probe(
-                    spark, idx, anchors, k=5, n_cells=8, **kw
-                ).collect(),
-            )
-        )
+    def probe(path, **kw):
+        return sorted(map(tuple, ivf_vindex_probe(
+            spark, path, anchors, k=10, n_probe=3, **kw
+        ).collect()))
 
-    assert probe(version=2) == probe(), "post-recluster pin must match"
+    assert probe(idx, version=0) == probe(ref)
 
 
 def test_coreset_realized_pool_guard(spark):
@@ -1984,159 +1910,129 @@ def test_coreset_realized_pool_guard(spark):
     assert [r["rank"] for r in sorted(out, key=lambda r: r.rank)] == [1, 2, 3]
 
 
-def test_version_pin_empty_census_raises_descriptive(spark, tmp_path):
-    """ADVICE r8 (low): a version whose census is EMPTY (empty build /
-    empty-batch tick) must produce a descriptive error from the pinned
-    probe path, not spark.read.parquet()'s opaque 'cannot infer
-    schema' on zero paths."""
-    import os
+def test_version_pin_empty_census_raises_descriptive(spark, emb, tmp_path):
+    """ADVICE r8 (low): a pin the chain cannot resolve must raise a
+    descriptive error naming the versions it has — never the reader's
+    opaque 'cannot infer schema' or PATH_NOT_FOUND on zero paths."""
+    import pytest
 
-    from uts_spark.functions.dedup import (
-        index_history_append,
-        index_scan_at,
-    )
-
-    idx = str(tmp_path / "empty")
-    os.makedirs(idx)
-    index_history_append(idx, 0, [])  # an empty build's census
-    with pytest.raises(ValueError, match="EMPTY file census"):
-        index_scan_at(spark, idx, 0)
-
-
-def test_index_history_vacuum_bounds_sidecar(spark, tmp_path):
-    """VERDICT r8 #7: the history sidecar grows one line per tick
-    forever; vacuum truncates to the records from the last reset on.
-    Nothing reachable changes — the current version's census and
-    probe results are identical, stale pins raise the SAME 'predates
-    the rewrite' error (the reset line is retained), the epoch does
-    not regress — and the dead lines are gone."""
-    from uts_spark.functions.dedup import (
-        index_epoch,
-        index_files_at,
-        index_history_vacuum,
-        index_history_versions,
-        minhash_index_append_idempotent,
-        minhash_index_delete,
-        minhash_index_write,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    base = docs.filter(F.col("doc_id") % 11 == 0)
-    b1 = docs.filter(F.col("doc_id") % 11 == 1)
-    b2 = docs.filter(F.col("doc_id") % 11 == 2)
-    cfg = dict(n=3, k=16, bands=4)
+    from uts_spark.functions.vindex import ivf_vindex_build, ivf_vindex_probe
 
     idx = str(tmp_path / "idx")
-    minhash_index_write(base, "text", "doc_id", idx, fingerprint="f0", **cfg)
-    minhash_index_append_idempotent(b1, "text", "doc_id", idx, 0, **cfg)
-    minhash_index_delete(spark, b1, "text", "doc_id", idx, **cfg)  # reset v2
-    minhash_index_append_idempotent(b2, "text", "doc_id", idx, 1, **cfg)
-    assert [r["version"] for r in index_history_versions(idx)] == [0, 1, 2, 3]
+    ivf_vindex_build(emb, idx, n_cells=4)
+    anchors = emb.filter(F.col("vec_id") < 3)
+    with pytest.raises(ValueError, match=r"version 7 not found \(have \[0\]\)"):
+        ivf_vindex_probe(spark, idx, anchors, k=5, version=7)
+    with pytest.raises(ValueError, match="no committed versions"):
+        ivf_vindex_probe(spark, str(tmp_path / "nothing"), anchors, k=5)
 
-    epoch_before = index_epoch(idx)
-    census_before = index_files_at(idx, 3)
-    removed = index_history_vacuum(idx)
-    assert removed == 2  # versions 0 and 1 dropped
-    assert [r["version"] for r in index_history_versions(idx)] == [2, 3]
-    assert index_files_at(idx, 3) == census_before
-    assert index_epoch(idx) == epoch_before
-    for v in (0, 1):
-        with pytest.raises(ValueError, match="predates the rewrite"):
-            index_files_at(idx, v)
-    # idempotent: second vacuum is a no-op
-    assert index_history_vacuum(idx) == 0
-    # no reset in history -> no-op by design
-    from uts_spark.functions.dedup import index_history_append
 
-    fresh = str(tmp_path / "fresh")
-    import os
+def test_index_history_vacuum_bounds_sidecar(spark, docs, tmp_path):
+    """VERDICT r8 #7: the version chain grows one manifest per tick;
+    vacuum bounds it to the newest versions. Nothing reachable changes
+    — the current version's probe is identical, an expired pin raises
+    a descriptive error, and the next commit's version does not
+    regress."""
+    import pytest
 
-    os.makedirs(fresh)
-    index_history_append(fresh, 0, ["a.parquet"])
-    assert index_history_vacuum(fresh) == 0
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        minhash_vindex_probe,
+    )
+    from uts_spark.sources.versioned import list_versions, vacuum
+
+    cfg = dict(n=3, k=16, bands=4)
+    d = docs.select("doc_id", "text")
+    idx = str(tmp_path / "idx")
+    minhash_vindex_build(
+        d.filter(F.col("doc_id") % 6 == 0), "text", "doc_id", idx, **cfg
+    )
+    for rem in (1, 2, 3, 4):
+        minhash_vindex_append(
+            d.filter(F.col("doc_id") % 6 == rem), "text", "doc_id", idx,
+            batch_id=rem, **cfg,
+        )
+    new = d.filter(F.col("doc_id") % 6 == 5)
+    old = d.filter(F.col("doc_id") % 6 != 5)
+
+    def probe(**kw):
+        return sorted(map(tuple, minhash_vindex_probe(
+            spark, idx, new, old, "text", "doc_id", threshold=0.3,
+            **cfg, **kw,
+        ).collect()))
+
+    want = probe()
+    assert len(list_versions(idx)) == 5
+    assert sorted(vacuum(idx, keep_last=2)) == [0, 1, 2]
+    assert [m["version"] for m in list_versions(idx)] == [3, 4]
+    assert probe() == want
+    with pytest.raises(ValueError, match="not found"):
+        probe(version=1)
+    assert minhash_vindex_append(
+        new, "text", "doc_id", idx, batch_id=5, **cfg
+    ) == 5
 
 
 def test_drift_control_loop_closed(spark, tmp_path):
-    """VERDICT r8 #3: the ingest tick measures, records, and ACTS.
-    (a) an in-distribution batch records its fit ints on the history
-    line and does not recluster; (b) a drifted batch trips the 0.82
-    flag, the recluster runs, the history carries forward with a
-    reset (stale pins raise), and the fit reference refreshes to the
-    post-recluster corpus fit."""
-    from uts_spark.functions.dedup import (
-        index_files_at,
-        index_history_versions,
+    """VERDICT r8 #3 through the facade: index_service_tick on an IVF
+    index measures, commits, and ACTS. (a) an in-distribution batch
+    commits its fit ints WITH its rows and does not recluster; (b) an
+    orthogonal-cluster batch trips the 0.82 flag and the recluster
+    runs as the next version, refreshing fit_ref to the post-recluster
+    corpus fit; (c) a pin at the build version still resolves the
+    frozen centroids."""
+    from uts_spark.functions.index_protocol import (
+        index_build,
+        index_service_tick,
     )
-    from uts_spark.functions.similarity import (
-        ivf_fit_ref_read,
-        ivf_fit_ref_write,
-        ivf_index_fit_ints,
-        ivf_index_ingest_tick,
-        ivf_index_write,
-    )
+    from uts_spark.sources.versioned import list_versions
 
-    def dvec_rows(ids, center_of):
-        rows = []
-        for vid in ids:
-            v = [((vid * 31 + j * 7) % 16 - 8) / 16.0 for j in range(64)]
-            v[center_of(vid)] += 8.0
-            rows.append((vid, v))
-        return rows
+    def dvec(id_col, center_col):
+        return F.transform(
+            F.sequence(F.lit(0), F.lit(63)),
+            lambda j: (
+                ((id_col * 31 + j * 7) % 16 - 8).cast("double")
+                / F.lit(16.0)
+            )
+            + F.when(j == center_col, F.lit(8.0)).otherwise(F.lit(0.0)),
+        )
 
-    base = spark.createDataFrame(
-        dvec_rows(range(100), lambda i: i % 8),
-        "vec_id long, embedding array<double>",
-    )
-    centers = spark.createDataFrame(
-        [(9000 + k, [8.0 if j == k else 0.0 for j in range(64)])
-         for k in range(8)],
-        "vec_id long, embedding array<double>",
-    )
-    idx = str(tmp_path / "ivf")
-    ivf_index_write(base, idx, n_cells=8, centroid_src=centers)
-    s, n = ivf_index_fit_ints(spark, base, idx)
-    ivf_fit_ref_write(idx, s, n)
+    def frame(lo, hi, shift):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("vec_id"),
+            dvec(F.col("id"), F.lit(shift) + F.col("id") % 8).alias(
+                "embedding"
+            ),
+        )
 
-    # (a) in-distribution batch: stat recorded, NO corrective action
-    good = spark.createDataFrame(
-        dvec_rows(range(1000, 1020), lambda i: i % 8),
-        "vec_id long, embedding array<double>",
+    centers = spark.range(8).select(
+        (F.col("id") + F.lit(9000)).alias("vec_id"),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(63)),
+            lambda j: F.when(
+                j == F.col("id").cast("int"), F.lit(8.0)
+            ).otherwise(F.lit(0.0)),
+        ).alias("embedding"),
     )
-    out = ivf_index_ingest_tick(spark, good, idx, 0)
-    assert not out["reclustered"]
-    recs = index_history_versions(idx)
-    assert recs[-1]["batch_id"] == 0 and recs[-1]["fit_n"] == 20
-    assert not any(r.get("reset") for r in recs)
-    assert ivf_fit_ref_read(idx) == (s, n), "ref must not re-baseline"
+    path = str(tmp_path / "ivf_loop")
+    index_build(
+        frame(0, 160, 0), "ivf", path, fingerprint="f0", n_cells=8,
+        centroid_src=centers,
+    )
+    ref0 = list_versions(path)[-1]["fit_ref"]
 
-    # (b) drifted batch (clusters orthogonal to every frozen center)
-    bad = spark.createDataFrame(
-        dvec_rows(range(2000, 2020), lambda i: 56 + i % 8),
-        "vec_id long, embedding array<double>",
-    )
-    out = ivf_index_ingest_tick(spark, bad, idx, 1)
-    assert out["reclustered"]
-    recs = index_history_versions(idx)
-    assert recs[-1]["reset"] and recs[-1].get("recluster")
-    assert recs[-2]["batch_id"] == 1 and recs[-2]["fit_n"] == 20
-    # flag arithmetic: the drifted batch's recorded mean is far below
-    # 0.82 x the reference mean
-    assert recs[-2]["fit_sum"] * n * 1000 < 820 * s * recs[-2]["fit_n"]
-    for v in (0, 1, 2):
-        with pytest.raises(ValueError, match="predates the rewrite"):
-            index_files_at(idx, v)
-    new_ref = ivf_fit_ref_read(idx)
-    assert new_ref is not None and new_ref != (s, n)
-    assert new_ref[1] == 140  # 100 base + 20 + 20 appended
+    t1 = index_service_tick(spark, frame(1000, 1032, 0), path, batch_id=0)
+    assert t1["family"] == "ivf"
+    assert not t1["flagged"] and not t1["reclustered"]
+    assert list_versions(path)[-1]["fit_n"] == 32
 
-    # (c) the loop keeps serving: a further in-distribution tick
-    # against the REFRESHED quantizer does not flag
-    more = spark.createDataFrame(
-        dvec_rows(range(3000, 3010), lambda i: i % 8),
-        "vec_id long, embedding array<double>",
-    )
-    out = ivf_index_ingest_tick(spark, more, idx, 2)
-    assert not out["reclustered"]
+    t2 = index_service_tick(spark, frame(2000, 2032, 56), path, batch_id=1)
+    assert t2["flagged"] and t2["reclustered"]
+    chain = list_versions(path)
+    assert chain[-1]["operation"] == "recluster"
+    assert chain[-1]["fit_ref"] != ref0 and chain[-1]["fit_ref"][1] == 224
+    assert chain[0]["centroids_dir"] != chain[-1]["centroids_dir"]
 
 
 def test_qm6_refit_gate_and_shipped_path(spark):
@@ -2566,82 +2462,55 @@ def test_vindex_family_mismatch_fails_loudly(spark, emb, tmp_path):
 
 
 def test_minhash_ingest_tick_skew_flag_and_cap(spark, docs, tmp_path):
-    """The dedup ingest's closed skew loop (round-10 candidate #3): an
-    organic batch records its collision integers on the history line
-    and does NOT flag; a boilerplate flood (same slice, one template
-    text) trips the measured 8x flag, the cap verb quarantines its
-    mega-buckets (auditable under _quarantine), the history records a
-    RESET with the hot-bucket count, and a probe with a boiler-texted
-    doc finds NO candidates while a verbatim clone of an indexed doc
-    still matches at jaccard 1.0."""
-    from uts_spark.functions.dedup import (
-        index_history_versions,
-        minhash_coll_ref_init,
-        minhash_coll_ref_read,
-        minhash_index_probe,
-        minhash_index_write,
-        minhash_ingest_tick,
+    """The dedup ingest's closed skew loop through the facade
+    (index_service_tick on a minhash index): an organic batch does NOT
+    flag; a boilerplate flood trips the measured 8x flag and the cap
+    quarantines its mega-buckets into a manifest-referenced dir; a
+    probe with a boiler-texted doc then finds NO candidates, while a
+    verbatim clone of an indexed doc still matches at jaccard 1.0."""
+    from uts_spark.functions.index_protocol import (
+        index_build,
+        index_probe,
+        index_service_tick,
     )
+    from uts_spark.sources.versioned import list_versions
 
-    BOILER = "limited time offer click here to unsubscribe from this list"
+    BOILER = "act now exclusive deal free shipping on all orders today"
     d = docs.select("doc_id", "text")
     base = d.filter(~F.col("doc_id").__mod__(11).isin(3, 7))
     b1 = d.filter(F.col("doc_id") % 11 == 3)
     boiler = d.filter(F.col("doc_id") % 11 == 7).select(
         "doc_id", F.lit(BOILER).alias("text")
     )
-    path = str(tmp_path / "midx")
-    cfg = dict(n=3, k=16, bands=4)
-    minhash_index_write(base, "text", "doc_id", path, fingerprint="f0", **cfg)
-    ref0 = minhash_coll_ref_init(spark, path)
-    assert ref0["rows_total"] == ref0["rown"] > 0
-
-    t1 = minhash_ingest_tick(spark, b1, "text", "doc_id", path, 0, **cfg)
-    assert not t1["flagged"] and t1["capped_rows"] == 0 and t1["row_n"] > 0
-    # rows_total advanced by the appended band rows
-    assert (
-        minhash_coll_ref_read(path)["rows_total"]
-        == ref0["rows_total"] + t1["row_n"]
+    path = str(tmp_path / "mh_loop")
+    index_build(
+        base, "minhash", path, text_col="text", id_col="doc_id",
+        n=3, k=16, bands=4,
     )
+    cols = dict(text_col="text", id_col="doc_id")
+    t1 = index_service_tick(spark, b1, path, batch_id=0, **cols)
+    assert t1["family"] == "minhash" and not t1["flagged"]
+    t2 = index_service_tick(spark, boiler, path, batch_id=1, **cols)
+    assert t2["flagged"] and t2["capped_rows"] > 0
+    m = list_versions(path)[-1]
+    assert spark.read.parquet(m["quarantine_dir"]).count() == t2["capped_rows"]
 
-    t2 = minhash_ingest_tick(spark, boiler, "text", "doc_id", path, 1, **cfg)
-    assert t2["flagged"] and t2["capped_rows"] >= t2["row_n"]
-    q = spark.read.parquet(str(tmp_path / "midx" / "_quarantine"))
-    assert q.count() == t2["capped_rows"]
-    # the live index retains NO row of any quarantined bucket
-    live = spark.read.parquet(path)
-    assert (
-        live.join(
-            q.select("band", "bucket").distinct(), ["band", "bucket"]
-        ).count()
-        == 0
-    )
-    recs = index_history_versions(path)
-    assert recs[-1]["reset"] and recs[-1]["hot_buckets"] > 0
-    by_bid = {r.get("batch_id"): r for r in recs if "batch_id" in r}
-    assert by_bid[0]["coll_sum"] == t1["coll_sum"]
-    assert by_bid[1]["coll_sum"] == t2["coll_sum"] > t1["coll_sum"]
-
-    # probe: boiler-texted doc -> zero candidates (its buckets are
-    # quarantined); verbatim clone of an indexed doc -> jaccard 1.0
-    clone_src = base.limit(1)
-    probe = clone_src.select(
+    clone_src = base.orderBy("doc_id").limit(1)
+    probe_new = clone_src.select(
         (F.col("doc_id") + F.lit(10_000_000)).alias("doc_id"), "text"
     ).unionByName(
         spark.createDataFrame([(20_000_000, BOILER)], "doc_id long, text string")
     )
     old = base.unionByName(b1).unionByName(boiler)
-    got = minhash_index_probe(
-        spark, path, probe, old, "text", "doc_id", threshold=0.5, **cfg
+    rows = index_probe(
+        spark, path, (probe_new, old, "text", "doc_id"), threshold=0.3
     ).collect()
-    new_ids = {r["id_new"] for r in got}
-    assert 20_000_000 not in new_ids
-    src_id = clone_src.first()["doc_id"]
+    assert not any(r.id_new == 20_000_000 for r in rows)
+    clone_id = clone_src.first()["doc_id"]
     assert any(
-        r["id_new"] == src_id + 10_000_000
-        and r["id_old"] == src_id
-        and r["jaccard"] == 1.0
-        for r in got
+        r.id_new == clone_id + 10_000_000 and r.id_old == clone_id
+        and r.jaccard == 1.0
+        for r in rows
     )
 
 
@@ -3021,60 +2890,43 @@ def test_ivfpq_vindex_ingest_tick_distortion_loop(spark, tmp_path):
     assert read_version(spark, path).count() == n_after
 
 
-def test_index_history_changes_feed_and_reset_refusal(spark, tmp_path):
-    """Marker-index CDF: the 0->1 feed is exactly the appended tick's
-    rows (no join — history diff); a range crossing a RESET (erasure)
-    refuses loudly; unknown versions and empty diffs behave."""
-    import os
-    import pytest as _pytest
-    from pyspark.sql import functions as F
+def test_index_history_changes_feed_and_reset_refusal(spark, docs, tmp_path):
+    """Change feed on the band index: the 0->1 feed is exactly the
+    appended tick's rows (dir-diff fast path — no join); a range
+    crossing an erasure (a copy-on-write rewrite) needs a key and
+    refuses loudly without one; an unknown version raises."""
+    import pytest
 
-    from uts_spark.functions.dedup import (
-        index_history_changes,
-        index_manifest_write,
-        index_tick,
-        minhash_index_append_idempotent,
-        minhash_index_delete,
-        minhash_index_write,
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        minhash_vindex_delete,
     )
+    from uts_spark.sources.versioned import read_version, table_changes
 
-    SF = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "text"
+    d = docs.select("doc_id", "text")
+    cfg = dict(n=3, k=16, bands=4)
+    idx = str(tmp_path / "idx")
+    minhash_vindex_build(
+        d.filter(F.col("doc_id") % 5 != 1), "text", "doc_id", idx, **cfg
     )
-    base = docs.filter(F.col("doc_id") % 7 != 0)
-    b1 = docs.filter(F.col("doc_id") % 7 == 0)
-    path = str(tmp_path / "mh_cdf")
-    cfg = dict(n=3, k=32, bands=8)
-    minhash_index_write(base, "text", "doc_id", path, fingerprint="f0", **cfg)
-    index_manifest_write(path, "f0", **cfg)
-    index_tick(
-        path, "f1",
-        lambda: minhash_index_append_idempotent(
-            b1, "text", "doc_id", path, batch_id=0, **cfg
-        ),
-        **cfg,
+    b1 = d.filter(F.col("doc_id") % 5 == 1)
+    minhash_vindex_append(b1, "text", "doc_id", idx, batch_id=0, **cfg)
+    feed = table_changes(spark, idx, 0, 1)
+    assert {r["_change_type"] for r in feed.collect()} == {"insert"}
+    got = feed.drop("_change_type")
+    v1, v0 = read_version(spark, idx, 1), read_version(spark, idx, 0)
+    want = v1.exceptAll(v0)
+    assert got.count() == want.count() > 0
+    assert got.select(*want.columns).exceptAll(want).isEmpty()
+
+    minhash_vindex_delete(
+        spark, b1.select(F.col("doc_id").alias("id")), idx, **cfg
     )
-
-    feed = index_history_changes(spark, path, 0, 1)
-    assert set(feed.select("_change_type").distinct().toPandas()[
-        "_change_type"
-    ]) == {"insert"}
-    # feed ids == the appended batch's ids, 8 band rows per doc
-    n_b1 = b1.count()
-    assert feed.count() == n_b1 * 8
-    assert index_history_changes(spark, path, 0, 0).count() == 0
-    assert index_history_changes(spark, path, 1, 1).count() == 0
-
-    with _pytest.raises(ValueError, match="unknown version"):
-        index_history_changes(spark, path, 0, 99)
-
-    # erasure appends a reset: feeds crossing it refuse
-    minhash_index_delete(
-        spark, b1.limit(5), "text", "doc_id", path, **cfg
-    )
-    with _pytest.raises(ValueError, match="reset"):
-        index_history_changes(spark, path, 0)
+    with pytest.raises(ValueError):
+        table_changes(spark, idx, 1, 2)
+    with pytest.raises(ValueError):
+        table_changes(spark, idx, 0, 9)
 
 
 def test_vindex_delete_mor_lifecycle(spark, emb, tmp_path):
@@ -3751,26 +3603,31 @@ def test_cc_never_mutates_session_conf(spark):
 
 
 def test_lsh_bucket_table_np_equals_agg(emb):
-    """VERDICT r10 #6: the zero-shuffle mapInPandas LSH kernel (the
-    default) and the crossJoin+groupBy shape produce EXACTLY the same
-    (id, table, bucket) assignments — the fold-the-winner
-    precondition (measured 4.5x at 1M vectors, tools/lsh_bucket_ab.py;
-    SCALE.md round 11). keep_cols ride both shapes."""
-    from uts_spark.functions.similarity import lsh_bucket_table
+    """The multi-table mapInPandas kernel must equal, table by table,
+    the single-table Column form ``lsh_buckets(table_id=t)`` — an
+    independent reference (per-plane aggregate HOFs in the JVM, no
+    GEMM)."""
+    from uts_spark.functions.similarity import lsh_bucket_table, lsh_buckets
 
-    def key(df):
-        return sorted(
-            (r.vec_id, r.table, r.bucket, r.label) for r in df.collect()
-        )
-
-    a = lsh_bucket_table(
-        emb, 64, planes=8, tables=3, keep_cols=("label",), impl="agg"
-    )
-    b = lsh_bucket_table(
-        emb, 64, planes=8, tables=3, keep_cols=("label",), impl="np"
-    )
-    assert key(a) == key(b)
-    assert set(a.columns) == set(b.columns)
+    planes, tables = 8, 3
+    got = {
+        (r["vec_id"], r["table"], r["bucket"], r["label"])
+        for r in lsh_bucket_table(
+            emb, 64, planes=planes, tables=tables, keep_cols=("label",)
+        ).collect()
+    }
+    want = set()
+    for t in range(tables):
+        want |= {
+            (r["vec_id"], t, r["bucket"], r["label"])
+            for r in emb.select(
+                "vec_id", "label",
+                lsh_buckets(emb, "embedding", 64, planes, table_id=t).alias(
+                    "bucket"
+                ),
+            ).collect()
+        }
+    assert got == want and len(got) == emb.count() * tables
 
 
 def test_vindex_age_retention_quantizer_sidecars(spark, emb, tmp_path):

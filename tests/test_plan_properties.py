@@ -689,36 +689,48 @@ def test_timestamp_bucketing_floors_on_negative_ts(spark):
     assert con is not None
 
 
+def _index_pushed_filters(p, key):
+    """PushedFilters of every FileScan in plan text ``p`` whose
+    ReadSchema carries the index key column ``key`` (the index rows —
+    corpus and quantizer-sidecar scans lack it). Snapshot indexes are
+    not directory-partitioned: rows are cluster-sorted on the probe
+    keys at write, so the probe's key predicate must reach the parquet
+    reader (row-group min/max pruning) instead of filtering above it."""
+    segs = [
+        seg for seg in p.split("FileScan")[1:]
+        if f"{key}:" in seg.split("ReadSchema:", 1)[1].split("\n", 1)[0]
+    ]
+    return [seg.split("PushedFilters: [", 1)[1].split("], ReadSchema")[0]
+            for seg in segs]
+
+
 def test_ann_index_probe_scan_is_partition_pruned(spark, sf_dir):
     # the persisted-index probe must scan ONLY the anchors' (table,
-    # bucket) partitions — the index scan carries non-empty
-    # PartitionFilters on both partition columns, never a full scan
+    # bucket) keys — the index scan pushes a predicate on both sort
+    # columns into the parquet reader, never a full scan
     p = plan(spark, sf_dir, "similarity_ann_index_probe")
-    scans = [seg for seg in p.split("PartitionFilters: [")[1:]]
-    idx_filters = [seg.split("]")[0] for seg in scans]
-    assert any("bucket" in f and "table" in f for f in idx_filters), idx_filters
+    pushed = _index_pushed_filters(p, "bucket")
+    assert pushed and all(
+        "bucket" in f and "table" in f for f in pushed
+    ), pushed
 
 
 def test_ivf_index_probe_scan_is_partition_pruned(spark, sf_dir):
-    # the persisted-IVF probe must scan only its n_probe cell
-    # directories: the index scan's PartitionFilters carries `cell`
+    # the persisted-IVF probe must scan only its n_probe cells: the
+    # index scan pushes the `cell` predicate into the parquet reader
     p = plan(spark, sf_dir, "similarity_ann_ivf_index_probe")
-    idx_filters = [seg.split("]")[0] for seg in p.split("PartitionFilters: [")[1:]]
-    assert any("cell" in f and f.strip() for f in idx_filters), idx_filters
+    pushed = _index_pushed_filters(p, "cell")
+    assert pushed and all("In(cell" in f for f in pushed), pushed
 
 
 def test_ivfpq_probe_scan_is_partition_pruned_no_full_scan(spark, sf_dir):
     # the composed IVF-PQ probe (round 6): EVERY scan of the persisted
-    # index carries a non-empty `cell` PartitionFilter — codes, ADC and
-    # re-rank all start from the PRUNED scan, never a full-index pass
+    # index carries the `cell` predicate — codes, ADC and re-rank all
+    # start from the PRUNED scan, never a full-index pass
     p = plan(spark, sf_dir, "similarity_ann_ivfpq_probe")
-    index_scans = [
-        seg for seg in p.split("FileScan")[1:] if "ann_ivfpq_index" in seg
-    ]
-    assert index_scans  # the probe must actually read the index
-    for seg in index_scans:
-        filters = seg.split("PartitionFilters: [", 1)[1].split("]")[0]
-        assert "cell" in filters and filters.strip(), filters
+    pushed = _index_pushed_filters(p, "cell")
+    assert pushed  # the probe must actually read the index
+    assert all("In(cell" in f for f in pushed), pushed
 
 
 # --- Round 6: registry-wide window-partition sweep (VERDICT r5 #2) ----------
@@ -828,25 +840,6 @@ def test_utf8_prefix_key_monotone_under_binary_string_order(spark):
     assert got == {t: i for i, t in enumerate(vocab)}
 
 
-def test_minhash_index_probe_scan_is_partition_pruned(spark, sf_dir):
-    # dedup-as-a-service: the persisted band index is scanned ONLY at
-    # the probe batch's (band, grp) partitions — every index scan
-    # carries non-empty PartitionFilters on both partition columns.
-    # checkpoint=False keeps the lazy plan (the registered query eagerly
-    # checkpoints to release its shingle caches per probe, ADVICE r6).
-    from uts_spark.queries.llm_ops import _minhash_index_probe_impl
-
-    df = _minhash_index_probe_impl(spark, sf_dir, checkpoint=False)
-    p = df._jdf.queryExecution().executedPlan().toString()
-    index_scans = [
-        seg for seg in p.split("FileScan")[1:] if "dedup_minhash_index" in seg
-    ]
-    assert index_scans
-    for seg in index_scans:
-        filters = seg.split("PartitionFilters: [", 1)[1].split("]")[0]
-        assert "band" in filters and "grp" in filters, filters
-
-
 def test_privacy_verdict_joins_unhinted_but_aqe_broadcasts(spark, sf_dir):
     # VERDICT r7 #2: verdict cardinality = |event_type x day x band|
     # grows with the time axis, so the ladders must NOT force-broadcast
@@ -867,50 +860,3 @@ def test_privacy_verdict_joins_unhinted_but_aqe_broadcasts(spark, sf_dir):
         assert "BroadcastHashJoin" in p, name
 
 
-def test_version_pinned_index_probe_still_partition_pruned(spark, sf_dir):
-    # round 8: a version-pinned probe reads an EXPLICIT file list with
-    # basePath — the claim that partition pruning survives must be
-    # plan-pinned, not asserted: the pinned scan's PartitionFilters
-    # still carries both partition columns. The registered query eagerly
-    # checkpoints (hiding lineage), so build the index through it, then
-    # re-issue the pinned probe lazily.
-    from uts_spark.functions.dedup import minhash_index_probe
-    from uts_spark.queries.llm_ops import (
-        _MIDX_BANDS,
-        _MIDX_K,
-        _MIDX_MOD,
-        _MIDX_N,
-        _MIDX_REM,
-        _MIDX_REM2,
-        _MIDX_THR,
-        _frame_fingerprint,
-        minhash_index_path,
-    )
-
-    QUERIES["dedup_minhash_index_version_probe"](spark, sf_dir).collect()
-
-    from pyspark.sql import functions as F
-
-    docs = QUERIES  # noqa: F841  (placeholder keeps import block tight)
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    base = d.filter(
-        (F.col("doc_id") % _MIDX_MOD != _MIDX_REM)
-        & (F.col("doc_id") % _MIDX_MOD != _MIDX_REM2)
-    )
-    b2 = d.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM2)
-    cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
-    path = minhash_index_path(sf_dir, _frame_fingerprint(base), **cfg) + "_ver"
-    df = minhash_index_probe(
-        spark, path, b2, base, "text", "doc_id",
-        threshold=_MIDX_THR, version=0, checkpoint=False, **cfg,
-    )
-    p = df._jdf.queryExecution().executedPlan().toString()
-    # select the index scans by their read schema (id, bucket, band,
-    # grp) — the Location path list is width-truncated in plan strings
-    index_scans = [
-        seg for seg in p.split("FileScan")[1:] if "bucket#" in seg[:200]
-    ]
-    assert index_scans, "version-pinned index scan missing from the plan"
-    for seg in index_scans:
-        filters = seg.split("PartitionFilters: [", 1)[1].split("]")[0]
-        assert "band" in filters and "grp" in filters, filters

@@ -1362,23 +1362,22 @@ def test_stream_merges_into_versioned_table(spark, tmp_path):
 
 def test_stream_ingest_crash_midbatch_restart_converges(spark, tmp_path):
     """VERDICT r7 #6: kill the dedup-index ingest stream MID-EPOCH —
-    after a micro-batch's files hit the index but BEFORE its
-    checkpoint commits — then restart from the same checkpoint. With
-    the batch-id-keyed idempotent append the replayed epoch sweeps its
-    own torn publish and re-publishes, so the final index row multiset
-    and manifest chain exactly equal an uninterrupted run's (plain
+    after a micro-batch's append COMMITTED to the index but BEFORE its
+    checkpoint commits — then restart from the same checkpoint. The
+    batch-keyed exactly-once append finds the replayed batch's key on
+    the committed manifest and commits nothing, so the final index
+    rows and version chain exactly equal an uninterrupted run's (plain
     append-in-foreachBatch would duplicate the replayed batch's rows
     forever)."""
-    import glob
-    import os
-
     import pytest
-    from uts_spark.functions.dedup import (
-        index_manifest_write,
-        index_state,
-        minhash_index_append_idempotent,
-        minhash_index_write,
+
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        vindex_config,
+        vindex_seal,
     )
+    from uts_spark.sources.versioned import list_versions, read_version
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     base = docs.filter(F.col("doc_id") % 11 != 3)
@@ -1389,7 +1388,7 @@ def test_stream_ingest_crash_midbatch_restart_converges(spark, tmp_path):
     b1.select("doc_id", "text").repartition(4).write.parquet(src)
 
     def build(idx):
-        minhash_index_write(
+        minhash_vindex_build(
             base, "text", "doc_id", idx, fingerprint="fp0", **cfg
         )
 
@@ -1408,8 +1407,9 @@ def test_stream_ingest_crash_midbatch_restart_converges(spark, tmp_path):
             q.stop()
 
     def appender(idx):
-        return lambda bdf, bid: minhash_index_append_idempotent(
-            bdf, "text", "doc_id", idx, bid, **cfg
+        return lambda bdf, bid: minhash_vindex_append(
+            bdf, "text", "doc_id", idx, fingerprint="ingesting",
+            batch_id=bid, **cfg,
         )
 
     # reference: uninterrupted ingest of all 4 micro-batches
@@ -1417,7 +1417,7 @@ def test_stream_ingest_crash_midbatch_restart_converges(spark, tmp_path):
     build(idx_ref)
     run_stream(idx_ref, str(tmp_path / "chk_ref"), appender(idx_ref))
 
-    # crashing run: batch 2 PUBLISHES its files, then dies pre-commit
+    # crashing run: batch 2 COMMITS its append, then dies pre-checkpoint
     idx_c = str(tmp_path / "c")
     build(idx_c)
     chk = str(tmp_path / "chk_c")
@@ -1425,37 +1425,30 @@ def test_stream_ingest_crash_midbatch_restart_converges(spark, tmp_path):
     def crashing(bdf, bid):
         appender(idx_c)(bdf, bid)
         if bid == 2:
-            raise RuntimeError("simulated crash after files hit disk")
+            raise RuntimeError("simulated crash after the index commit")
 
     with pytest.raises(Exception):
         run_stream(idx_c, chk, crashing)
-    torn = glob.glob(os.path.join(idx_c, "band=*", "grp=*", "b2-*.parquet"))
-    assert torn, "the crash must leave batch-2 files on disk (torn state)"
+    assert len(list_versions(idx_c)) == 4, "batch 2 must have committed"
 
     # restart from the SAME checkpoint with the normal appender: the
-    # uncommitted epoch replays (same batch id), sweeps, re-publishes
+    # uncommitted epoch replays (same batch id) and is skipped
     run_stream(idx_c, chk, appender(idx_c))
 
     cols = ["id", "band", "bucket", "grp"]
     ref_rows = sorted(
-        map(tuple, spark.read.parquet(idx_ref).select(*cols).collect())
+        map(tuple, read_version(spark, idx_ref).select(*cols).collect())
     )
     got_rows = sorted(
-        map(tuple, spark.read.parquet(idx_c).select(*cols).collect())
+        map(tuple, read_version(spark, idx_c).select(*cols).collect())
     )
     assert got_rows == ref_rows, "restarted index multiset diverged"
+    # one commit per batch on both chains — the replay committed nothing
+    keys = lambda idx: [m.get("batch_key") for m in list_versions(idx)]  # noqa: E731
+    assert keys(idx_c) == keys(idx_ref) and len(keys(idx_ref)) == 5
 
-    # physical convergence too: per-batch published file censuses match
-    def census(idx):
-        return sorted(
-            os.path.relpath(p, idx)
-            for p in glob.glob(os.path.join(idx, "band=*", "grp=*", "b*-*.parquet"))
-        )
-
-    assert census(idx_c) == census(idx_ref)
-    assert not os.path.exists(os.path.join(idx_c, "_staging", "b2"))
-
-    # manifest chain ends identically
-    index_manifest_write(idx_ref, "fp1", **cfg)
-    index_manifest_write(idx_c, "fp1", **cfg)
-    assert index_state(idx_c) == index_state(idx_ref) == "fp1"
+    # the chains end identically once sealed
+    vindex_seal(idx_ref, "fp1")
+    vindex_seal(idx_c, "fp1")
+    assert vindex_config(idx_c) == vindex_config(idx_ref)
+    assert vindex_config(idx_c)["fingerprint"] == "fp1"

@@ -45,16 +45,14 @@ def _synth_emb(spark, n: int):
 
 
 def ivf_append_ab() -> None:
-    """Round 7: IVF append cost vs frozen-centroid full rebuild when a
-    1% vector batch arrives. Run:
+    """IVF append cost vs frozen-centroid full rebuild when a 1% vector
+    batch arrives (snapshot verbs). Run:
     python3 tools/ann_smoke.py --ivf-append [n_vectors]"""
     from pyspark.sql import functions as F
 
-    from uts_spark.functions.similarity import (
-        ivf_index_append,
-        ivf_index_write,
-    )
+    from uts_spark.functions.vindex import ivf_vindex_append, ivf_vindex_build
     from uts_spark.session import get_spark
+    from uts_spark.sources.versioned import read_version
 
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
     spark = get_spark("ivf-append-ab")
@@ -74,12 +72,12 @@ def ivf_append_ab() -> None:
     scratch = tempfile.mkdtemp(prefix="ivf_app_")
     p_app, p_re = os.path.join(scratch, "a"), os.path.join(scratch, "r")
     try:
-        timed("base_build_once", lambda: ivf_index_write(
+        timed("base_build_once", lambda: ivf_vindex_build(
             base, p_app, n_cells=N_CELLS))
-        timed("append_batch", lambda: ivf_index_append(spark, batch, p_app))
-        timed("rebuild_full", lambda: ivf_index_write(
+        timed("append_batch", lambda: ivf_vindex_append(batch, p_app))
+        timed("rebuild_full", lambda: ivf_vindex_build(
             emb, p_re, n_cells=N_CELLS, centroid_src=base))
-        a, r = spark.read.parquet(p_app), spark.read.parquet(p_re)
+        a, r = read_version(spark, p_app), read_version(spark, p_re)
         same = a.count() == r.count() and a.drop("embedding").exceptAll(
             r.drop("embedding")).isEmpty()
         print(json.dumps({
@@ -95,21 +93,15 @@ def ivf_append_ab() -> None:
 
 
 def ann_delete_ab() -> None:
-    """Round 8 (VERDICT r7 #1): erasure cost vs full rebuild-without
-    for all three persisted vector-index families. Run:
+    """Erasure cost (bare-id pruned copy-on-write) vs full
+    rebuild-without for the three snapshot vector-index families. Run:
     python3 tools/ann_smoke.py --ann-delete [n_vectors] [mod]
     (mod=10 → 10% takedown-sized erasure batch)."""
     from pyspark.sql import functions as F
 
-    from uts_spark.functions.similarity import (
-        ivf_index_delete,
-        ivf_index_write,
-        ivfpq_index_delete,
-        ivfpq_index_write,
-        lsh_index_delete,
-        lsh_index_write,
-    )
+    from uts_spark.functions import vindex as vx
     from uts_spark.session import get_spark
+    from uts_spark.sources.versioned import list_versions, read_version
 
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
     mod = int(sys.argv[3]) if len(sys.argv) > 3 else 100  # 1% erasure
@@ -117,7 +109,7 @@ def ann_delete_ab() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     emb = _synth_emb(spark, n).cache()
     emb.count()
-    erase = emb.filter(F.col("vec_id") % mod == 7)
+    erase = emb.filter(F.col("vec_id") % mod == 7).select("vec_id")
     keep = emb.filter(F.col("vec_id") % mod != 7)
 
     timings: dict[str, float] = {}
@@ -133,24 +125,24 @@ def ann_delete_ab() -> None:
     try:
         fams = {
             "lsh": (
-                lambda p: lsh_index_write(emb, p, dim=DIM),
-                lambda p: lsh_index_delete(spark, erase, p, dim=DIM),
-                lambda p: lsh_index_write(keep, p, dim=DIM),
+                lambda p: vx.lsh_vindex_build(emb, p, DIM),
+                lambda p: vx.lsh_vindex_delete(spark, erase, p),
+                lambda p: vx.lsh_vindex_build(keep, p, DIM),
             ),
             "ivf": (
-                lambda p: ivf_index_write(emb, p, n_cells=N_CELLS),
-                lambda p: ivf_index_delete(spark, erase, p),
+                lambda p: vx.ivf_vindex_build(emb, p, n_cells=N_CELLS),
+                lambda p: vx.ivf_vindex_delete(spark, erase, p),
                 # rebuild keeps the BUILD corpus's centroids (frozen
                 # quantizer contract) so rows are comparable
-                lambda p: ivf_index_write(
+                lambda p: vx.ivf_vindex_build(
                     keep, p, n_cells=N_CELLS, centroid_src=emb
                 ),
             ),
             "ivfpq": (
-                lambda p: ivfpq_index_write(emb, p, dim=DIM, n_cells=N_CELLS),
-                lambda p: ivfpq_index_delete(spark, erase, p),
-                lambda p: ivfpq_index_write(
-                    keep, p, dim=DIM, n_cells=N_CELLS, centroid_src=emb
+                lambda p: vx.ivfpq_vindex_build(emb, p, DIM, n_cells=N_CELLS),
+                lambda p: vx.ivfpq_vindex_delete(spark, erase, p),
+                lambda p: vx.ivfpq_vindex_build(
+                    keep, p, DIM, n_cells=N_CELLS, centroid_src=emb
                 ),
             ),
         }
@@ -158,10 +150,12 @@ def ann_delete_ab() -> None:
             p_del = os.path.join(scratch, fam + "_d")
             p_re = os.path.join(scratch, fam + "_r")
             timed(f"{fam}_build_once", lambda: build(p_del))
-            removed = timed(f"{fam}_delete", lambda: delete(p_del))
+            timed(f"{fam}_delete", lambda: delete(p_del))
             timed(f"{fam}_rebuild_without", lambda: rebuild(p_re))
-            a = spark.read.parquet(p_del).drop("embedding")
-            r = spark.read.parquet(p_re).drop("embedding")
+            chain = list_versions(p_del)
+            removed = chain[0]["n_rows"] - chain[-1]["n_rows"]
+            a = read_version(spark, p_del).drop("embedding")
+            r = read_version(spark, p_re).drop("embedding")
             same = a.count() == r.count() and a.exceptAll(r).isEmpty()
             out["families"][fam] = {
                 "rows_removed": removed,
@@ -177,65 +171,7 @@ def ann_delete_ab() -> None:
         spark.stop()
 
 
-def ivf_fit_smoke() -> None:
-    """Round 8: the drift monitor's per-tick cost must be BATCH-shaped
-    (score the append batch against 8 frozen centroids), never
-    corpus-shaped — and the re-cluster it can trigger is a full build,
-    which is why it runs only on a fired flag. Run:
-    python3 tools/ann_smoke.py --fit [n_vectors]"""
-    from pyspark.sql import functions as F
-
-    from uts_spark.functions.similarity import (
-        ivf_index_fit,
-        ivf_index_recluster,
-        ivf_index_write,
-    )
-    from uts_spark.session import get_spark
-
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
-    spark = get_spark("ivf-fit-smoke")
-    spark.sparkContext.setLogLevel("ERROR")
-    emb = _synth_emb(spark, n).cache()
-    emb.count()
-    base = emb.filter(F.col("vec_id") % 100 != 7)
-    batch = emb.filter(F.col("vec_id") % 100 == 7)  # the 1% append tick
-
-    timings: dict[str, float] = {}
-
-    def timed(name, thunk):
-        t = time.time()
-        out = thunk()
-        timings[name] = round(time.time() - t, 2)
-        return out
-
-    scratch = tempfile.mkdtemp(prefix="ivf_fit_")
-    path = os.path.join(scratch, "idx")
-    try:
-        timed("base_build_once", lambda: ivf_index_write(
-            base, path, n_cells=N_CELLS))
-        fit_b = timed("fit_batch_tick", lambda: ivf_index_fit(
-            spark, batch, path))
-        fit_f = timed("fit_full_corpus", lambda: ivf_index_fit(
-            spark, emb, path))
-        timed("recluster_full", lambda: ivf_index_recluster(
-            spark, emb, path, n_cells=N_CELLS))
-        print(json.dumps({
-            "vectors": n,
-            "batch": batch.count(),
-            "fit_batch": round(fit_b, 6),
-            "fit_full": round(fit_f, 6),
-            "timings": timings,
-            "loadavg": os.getloadavg()[0],
-        }))
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-        spark.stop()
-
-
 def main() -> None:
-    if len(sys.argv) > 1 and sys.argv[1] == "--fit":
-        ivf_fit_smoke()
-        return
     if len(sys.argv) > 1 and sys.argv[1] == "--ivf-append":
         ivf_append_ab()
         return
@@ -245,12 +181,12 @@ def main() -> None:
     import numpy as np
     from pyspark.sql import functions as F
 
-    from uts_spark.functions.similarity import (
-        cosine_topk_blocked,
-        ivf_index_probe,
-        ivf_index_write,
-        ivfpq_index_probe,
-        ivfpq_index_write,
+    from uts_spark.functions.similarity import cosine_topk_blocked
+    from uts_spark.functions.vindex import (
+        ivf_vindex_build,
+        ivf_vindex_probe,
+        ivfpq_vindex_build,
+        ivfpq_vindex_probe,
     )
     from uts_spark.session import get_spark
 
@@ -291,28 +227,25 @@ def main() -> None:
     path = os.path.join(scratch, "ivf")
     try:
         t = time.time()
-        ivf_index_write(emb, path, n_cells=N_CELLS)
+        ivf_vindex_build(emb, path, n_cells=N_CELLS)
         timings["ivf_index_build_once"] = round(time.time() - t, 2)
 
-        run("ivf_probe_exact_rerank", lambda: ivf_index_probe(
-            spark, path, anchors, emb, k=K,
-            n_cells=N_CELLS, n_probe=N_PROBE))
+        run("ivf_probe_exact_rerank", lambda: ivf_vindex_probe(
+            spark, path, anchors, k=K, n_probe=N_PROBE))
 
         pq_names = []
         for n_cent, rerank in ((16, 40), (256, 400)):
             pq_path = os.path.join(scratch, f"ivfpq_{n_cent}")
             t = time.time()
-            ivfpq_index_write(
-                emb, pq_path, dim=DIM, n_cells=N_CELLS,
+            ivfpq_vindex_build(
+                emb, pq_path, DIM, n_cells=N_CELLS,
                 m_sub=8, n_cent=n_cent)
             timings[f"ivfpq_index_build_c{n_cent}_once"] = round(
                 time.time() - t, 2)
             name = f"ivfpq_probe_c{n_cent}_r{rerank}"
             pq_names.append(name)
-            run(name, lambda p=pq_path, c=n_cent, r=rerank: ivfpq_index_probe(
-                spark, p, anchors, emb, dim=DIM, k=K,
-                n_cells=N_CELLS, n_probe=N_PROBE,
-                m_sub=8, n_cent=c, rerank=r))
+            run(name, lambda p=pq_path, r=rerank: ivfpq_vindex_probe(
+                spark, p, anchors, k=K, n_probe=N_PROBE, rerank=r))
 
         truth = results["brute_force"]
         recalls = {

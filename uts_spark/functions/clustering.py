@@ -342,90 +342,8 @@ def cluster_assignment(
 
 
 # round-count telemetry for the CC A/B (tools/neardup_smoke.py --cc-ab):
-# each implementation records how many rounds it ran on its last call
+# each path records how many levels / rounds it ran on its last call
 LAST_CC_INFO: dict[str, int] = {}
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 30,
-) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond") — the A/B challenger to :func:`connected_components`
-    (min-label + pointer jumping), per VERDICT r4 #6.
-
-    Per round: large-star points every neighbor v > u at
-    m = min(N(u) + {u}); small-star re-points every neighbor v <= u at
-    m. Both are one groupBy + one join over the current edge list; the
-    edge list SHRINKS toward a star forest (u -> component-min), so
-    late rounds shuffle less than early ones — the property the paper
-    trades against pointer jumping's constant-size label table. The
-    measured A/B (SCALE.md) decides which is the default inside
-    cluster_assignment.
-
-    Same contract as connected_components: returns (node, component),
-    isolated nodes absent.
-    """
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _mins(adj: DataFrame) -> DataFrame:
-        return (
-            adj.groupBy("a")
-            .agg(F.min("b").alias("mb"))
-            .select("a", F.least("mb", F.col("a")).alias("m"))
-        )
-
-    for rnd in range(1, max_rounds + 1):
-        # large-star over the full symmetric adjacency
-        adj = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        large = (
-            adj.join(_mins(adj), "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        # small-star over edges oriented larger -> smaller
-        sadj = large.select(
-            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-        )
-        j = sadj.join(_mins(sadj), "a")  # (a, b, m)
-        small = (
-            j.select(F.col("b").alias("v"), F.col("m"))
-            .union(j.select(F.col("a").alias("v"), "m").distinct())
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .distinct()
-        )
-        new_e = small.select(
-            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-        ).localCheckpoint(eager=True)
-        changed = new_e.subtract(e).limit(1).count()
-        stable = changed == 0 and new_e.count() == e.count()
-        e = new_e
-        if stable:
-            LAST_CC_INFO["star_rounds"] = rnd
-            roots = e.select(F.col("b").alias("node")).distinct().select(
-                "node", F.col("node").alias("component")
-            )
-            return (
-                e.select(F.col("a").alias("node"), F.col("b").alias("component"))
-                .union(roots)
-                .groupBy("node")
-                .agg(F.min("component").alias("component"))
-            )
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_rounds} rounds"
-    )
 
 
 _PR_ONE = 1 << 40  # fixed-point unit for PageRank mass

@@ -1,70 +1,46 @@
-"""The index-protocol FACADE: one verb surface over both commit
-protocols (ROADMAP round-10 #2 — the marker-family retirement plan).
+"""The index FACADE: one verb surface over the four maintained index
+families (MinHash bands, LSH buckets, IVF cells, IVF-PQ cells+codes).
 
-Every maintained index family (MinHash bands, LSH, IVF, IVF-PQ) exists
-on two protocols:
+Every family commits through the snapshot protocol
+(functions/vindex.py): Iceberg-style fast-appends, copy-on-write
+rewrites, optimistic concurrency on a PUT-if-absent manifest, and
+quantizers as manifest sidecars. It is the protocol that is safe
+under concurrent writers and on object storage.
 
-- ``"marker"`` — the pending-marker / rename-swap family
-  (dedup.minhash_index_*, similarity.{lsh,ivf,ivfpq}_index_*):
-  single-writer O_EXCL markers, os.replace publishes, a JSONL version
-  history sidecar. POSIX-local-FS primitives; the original service
-  protocol (rounds 6-8).
-- ``"snapshot"`` — the CAS-manifest family (functions/vindex.py):
-  Iceberg-style fast-appends, copy-on-write rewrites, optimistic
-  concurrency, quantizers as manifest sidecars. The object-storage-safe
-  protocol (round 9).
+An earlier pending-marker / rename-swap protocol (O_EXCL markers,
+``os.replace`` publishes, a JSONL history sidecar) is retired: the
+matched A/B in SCALE.md round 9c measured the snapshot protocol
+faster on every maintenance verb (1.69x geomean, erasure 1.7-4.2x)
+and at parity on probes. Indexes written in that legacy layout are
+upgraded in one commit with :func:`vindex.vindex_migrate`; every verb
+here refuses a path that has no snapshot manifest chain, naming that
+verb, rather than guessing.
 
-``DEFAULT_PROTOCOL`` is **measured, not guessed**: tools/protocol_ab.py
-runs the full matched service suite (build -> append x3 -> warm probe ->
-scattered delete -> compact -> probe) for all four families on both
-protocols at 200k vectors / 100k docs. Measured (SCALE.md round 9c):
-snapshot wins the maintenance verbs at a 1.69x geomean — erasure
-1.7-4.2x (bare-id dir-stats-pruned copy-on-write vs re-sketch +
-partition rewrite), appends 1.1-3.4x (delta-dir + manifest commit vs
-partition-grid append), LSH across the board 1.5-3.6x — and probes sit
-at parity (1.15x geomean, inside warm-probe noise; same scan kernels,
-the manifest resolves dirs instead of a glob). The one structural
-marker win, the IVF-PQ build (0.70x), is the snapshot build paying for
-its drift monitor — the ``dist_ref`` distortion ints are an extra
-corpus-wide ADC pass the marker build simply doesn't have; feature
-cost, not protocol overhead. The marker verbs stay fully supported as
-the compatibility surface — pass ``protocol="marker"`` — but new
-services should not pick them: beyond the walls, only the snapshot
-protocol is safe under concurrent writers and on object storage.
-
-The facade is deliberately THIN: it owns protocol choice and family
-dispatch, never semantics — each route calls the same functions the
-per-family lanes register, so facade results are hash-identical to the
-family lanes' oracles (pinned in tests/test_index_protocol.py).
+The facade is deliberately THIN: it owns family dispatch, never
+semantics — each route calls the same functions the per-family lanes
+register, so facade results are hash-identical to the family lanes'
+oracles (pinned in tests/test_index_protocol.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# Measured default — see module docstring and SCALE.md round 9c.
-DEFAULT_PROTOCOL = "snapshot"
-
 _FAMILIES = ("minhash", "lsh", "ivf", "ivfpq")
 
 
-def _check(family: str, protocol: str | None) -> str:
+def _check(family: str) -> None:
     if family not in _FAMILIES:
         raise ValueError(f"unknown index family {family!r} (expected one of {_FAMILIES})")
-    proto = protocol or DEFAULT_PROTOCOL
-    if proto not in ("marker", "snapshot"):
-        raise ValueError(f"unknown index protocol {proto!r} (expected 'marker' or 'snapshot')")
-    return proto
 
 
 def index_build(
     df: DataFrame,
     family: str,
     path: str,
-    protocol: str | None = None,
     fingerprint: str = "",
     **config,
-) -> int | None:
+) -> int:
     """Build version 0 of a ``family`` index at ``path``.
 
     minhash config: text_col, id_col (required), n/k/bands/n_grps.
@@ -72,262 +48,112 @@ def index_build(
     ivf config: n_cells, id_col/vec_col, centroid_src.
     ivfpq config: dim (required), n_cells/m_sub/n_cent, id_col/vec_col.
 
-    Returns the committed snapshot version (snapshot protocol) or None
-    (marker protocol writes version 0 into its history sidecar)."""
-    proto = _check(family, protocol)
-    if proto == "snapshot":
-        from uts_spark.functions import vindex as vx
-
-        if family == "minhash":
-            return vx.minhash_vindex_build(
-                df, config.pop("text_col"), config.pop("id_col"), path,
-                fingerprint=fingerprint, **config,
-            )
-        if family == "lsh":
-            return vx.lsh_vindex_build(
-                df, path, config.pop("dim"), fingerprint=fingerprint, **config
-            )
-        if family == "ivf":
-            return vx.ivf_vindex_build(df, path, fingerprint=fingerprint, **config)
-        return vx.ivfpq_vindex_build(
-            df, path, config.pop("dim"), fingerprint=fingerprint, **config
-        )
-    from uts_spark.functions import dedup as dd
-    from uts_spark.functions import similarity as sim
+    Returns the committed snapshot version."""
+    _check(family)
+    from uts_spark.functions import vindex as vx
 
     if family == "minhash":
-        cfg = {k: config[k] for k in ("n", "k", "bands", "n_grps") if k in config}
-        dd.minhash_index_write(
+        return vx.minhash_vindex_build(
             df, config.pop("text_col"), config.pop("id_col"), path,
-            fingerprint=fingerprint or None, **config,
+            fingerprint=fingerprint, **config,
         )
-        cfg = {"n": 3, "k": 32, "bands": 8, "n_grps": 16, **cfg}
-    elif family == "lsh":
-        dim = config.pop("dim")
-        sim.lsh_index_write(df, path, dim, **config)
-        cfg = {"dim": dim, "planes": config.get("planes", 8), "tables": config.get("tables", 2)}
-    elif family == "ivf":
-        sim.ivf_index_write(df, path, **config)
-        cfg = {"n_cells": config.get("n_cells", 8)}
-    else:
-        dim = config.pop("dim")
-        sim.ivfpq_index_write(df, path, dim, **config)
-        cfg = {
-            "dim": dim,
-            "n_cells": config.get("n_cells", 8),
-            "m_sub": config.get("m_sub", 8),
-            "n_cent": config.get("n_cent", 16),
-        }
-    # the per-family marker builds (except minhash) historically leave
-    # no config manifest — services stamp one via index_tick. The
-    # facade stamps it at build so every later facade verb resolves
-    # (family, config) from the index itself, same as the snapshot
-    # route does from its CAS manifest.
-    dd.index_manifest_write(path, fingerprint, family=family, **cfg)
-    return None
+    if family == "lsh":
+        return vx.lsh_vindex_build(
+            df, path, config.pop("dim"), fingerprint=fingerprint, **config
+        )
+    if family == "ivf":
+        return vx.ivf_vindex_build(df, path, fingerprint=fingerprint, **config)
+    return vx.ivfpq_vindex_build(
+        df, path, config.pop("dim"), fingerprint=fingerprint, **config
+    )
 
 
 def index_append(
     batch: DataFrame,
     path: str,
-    protocol: str | None = None,
     fingerprint: str = "",
     batch_id: int | None = None,
     stream_id: str | None = None,
     **config,
-) -> int | None:
+) -> int:
     """Fold a batch into an existing index. Family is read from the
     index's own manifest — an append cannot disagree with the index it
-    extends. ``batch_id``/``stream_id`` opt into exactly-once commits
-    (snapshot protocol; the marker protocol's idempotent variants key
-    on (epoch, batch_id) via its history sidecar)."""
-    family, cfg = _family_config(path, protocol)
-    proto = _check(family, protocol)
-    if proto == "snapshot":
-        from uts_spark.functions import vindex as vx
+    extends. ``batch_id``/``stream_id`` opt into exactly-once commits."""
+    family, cfg = _family_config(path)
+    from uts_spark.functions import vindex as vx
 
-        if family == "minhash":
-            return vx.minhash_vindex_append(
-                batch, config.pop("text_col"), config.pop("id_col"), path,
-                fingerprint=fingerprint,
-                n=cfg["n"], k=cfg["k"], bands=cfg["bands"], n_grps=cfg["n_grps"],
-                batch_id=batch_id, stream_id=stream_id,
-            )
-        if family == "lsh":
-            return vx.lsh_vindex_append(
-                batch, path, cfg["dim"], fingerprint=fingerprint,
-                planes=cfg["planes"], tables=cfg["tables"],
-                batch_id=batch_id, stream_id=stream_id, **config,
-            )
-        if family == "ivf":
-            return vx.ivf_vindex_append(
-                batch, path, fingerprint=fingerprint,
-                batch_id=batch_id, stream_id=stream_id, **config,
-            )
-        return vx.ivfpq_vindex_append(
+    if family == "minhash":
+        return vx.minhash_vindex_append(
+            batch, config.pop("text_col"), config.pop("id_col"), path,
+            fingerprint=fingerprint,
+            n=cfg["n"], k=cfg["k"], bands=cfg["bands"], n_grps=cfg["n_grps"],
+            batch_id=batch_id, stream_id=stream_id,
+        )
+    if family == "lsh":
+        return vx.lsh_vindex_append(
+            batch, path, cfg["dim"], fingerprint=fingerprint,
+            planes=cfg["planes"], tables=cfg["tables"],
+            batch_id=batch_id, stream_id=stream_id, **config,
+        )
+    if family == "ivf":
+        return vx.ivf_vindex_append(
             batch, path, fingerprint=fingerprint,
             batch_id=batch_id, stream_id=stream_id, **config,
         )
-    from uts_spark.functions import dedup as dd
-    from uts_spark.functions import similarity as sim
-
-    spark = batch.sparkSession
-    if family == "minhash":
-        if batch_id is not None:
-            dd.minhash_index_append_idempotent(
-                batch, config.pop("text_col"), config.pop("id_col"), path,
-                batch_id=batch_id,
-                n=cfg["n"], k=cfg["k"], bands=cfg["bands"], n_grps=cfg["n_grps"],
-            )
-        else:
-            dd.minhash_index_append(
-                batch, config.pop("text_col"), config.pop("id_col"), path,
-                n=cfg["n"], k=cfg["k"], bands=cfg["bands"], n_grps=cfg["n_grps"],
-            )
-    elif family == "lsh":
-        if batch_id is not None:
-            sim.lsh_index_append_idempotent(
-                batch, path, cfg["dim"], batch_id=batch_id,
-                planes=cfg["planes"], tables=cfg["tables"], **config,
-            )
-        else:
-            sim.lsh_index_append(
-                batch, path, cfg["dim"],
-                planes=cfg["planes"], tables=cfg["tables"], **config,
-            )
-    elif family == "ivf":
-        if batch_id is not None:
-            sim.ivf_index_append_idempotent(
-                spark, batch, path, batch_id=batch_id, **config
-            )
-        else:
-            sim.ivf_index_append(spark, batch, path, **config)
-    else:
-        if batch_id is not None:
-            sim.ivfpq_index_append_idempotent(
-                spark, batch, path, cfg["dim"], batch_id=batch_id, **config
-            )
-        else:
-            sim.ivfpq_index_append(spark, batch, path, cfg["dim"], **config)
-    return None
+    return vx.ivfpq_vindex_append(
+        batch, path, fingerprint=fingerprint,
+        batch_id=batch_id, stream_id=stream_id, **config,
+    )
 
 
 def index_delete(
     spark,
     deleted: DataFrame,
     path: str,
-    protocol: str | None = None,
     fingerprint: str = "",
-    **config,
 ) -> int:
-    """Erase ids from an index (the GDPR verb). The snapshot route
-    takes BARE ids (manifest dir-stats prune the rewrite); the marker
-    route needs the deleted rows' CONTENT (text/vectors) to re-derive
-    their partitions — pass the full rows and the id/text/vec columns
-    the family expects. Returns rows removed (marker) or the committed
-    version (snapshot)."""
-    family, cfg = _family_config(path, protocol)
-    proto = _check(family, protocol)
-    if proto == "snapshot":
-        from uts_spark.functions import vindex as vx
+    """Erase ids from an index (the GDPR verb). Takes BARE ids —
+    manifest dir-stats prune the rewrite. Returns the committed
+    version."""
+    _family_config(path)
+    from uts_spark.functions import vindex as vx
 
-        return vx.vindex_delete_auto(spark, deleted, path, fingerprint=fingerprint)
-    from uts_spark.functions import dedup as dd
-    from uts_spark.functions import similarity as sim
-
-    if family == "minhash":
-        return dd.minhash_index_delete(
-            spark, deleted, config.pop("text_col"), config.pop("id_col"), path,
-            n=cfg["n"], k=cfg["k"], bands=cfg["bands"], n_grps=cfg["n_grps"],
-        )
-    if family == "lsh":
-        return sim.lsh_index_delete(
-            spark, deleted, path, cfg["dim"],
-            planes=cfg["planes"], tables=cfg["tables"], **config,
-        )
-    if family == "ivf":
-        return sim.ivf_index_delete(spark, deleted, path, **config)
-    return sim.ivfpq_index_delete(spark, deleted, path, **config)
+    return vx.vindex_delete_auto(spark, deleted, path, fingerprint=fingerprint)
 
 
 def index_probe(
     spark,
     path: str,
     probe_input,
-    protocol: str | None = None,
     version: int | None = None,
     **kwargs,
 ) -> DataFrame:
     """Probe an index. ``probe_input`` is the anchor frame (vector
     families) or the (new_docs, old_docs, text_col, id_col) tuple
-    (minhash). ``version`` pins a snapshot (both protocols support
-    time travel; the marker protocol resolves it via its history
-    sidecar)."""
-    family, cfg = _family_config(path, protocol)
-    proto = _check(family, protocol)
-    if proto == "snapshot":
-        from uts_spark.functions import vindex as vx
-
-        if family == "minhash":
-            new_docs, old_docs, text_col, id_col = probe_input
-            return vx.minhash_vindex_probe(
-                spark, path, new_docs, old_docs, text_col, id_col,
-                n=cfg["n"], k=cfg["k"], bands=cfg["bands"], n_grps=cfg["n_grps"],
-                version=version, **kwargs,
-            )
-        if family == "lsh":
-            return vx.lsh_vindex_probe(spark, path, probe_input, version=version, **kwargs)
-        if family == "ivf":
-            return vx.ivf_vindex_probe(spark, path, probe_input, version=version, **kwargs)
-        return vx.ivfpq_vindex_probe(spark, path, probe_input, version=version, **kwargs)
-    from uts_spark.functions import dedup as dd
-    from uts_spark.functions import similarity as sim
+    (minhash). ``version`` pins a snapshot."""
+    family, cfg = _family_config(path)
+    from uts_spark.functions import vindex as vx
 
     if family == "minhash":
         new_docs, old_docs, text_col, id_col = probe_input
-        return dd.minhash_index_probe(
+        return vx.minhash_vindex_probe(
             spark, path, new_docs, old_docs, text_col, id_col,
             n=cfg["n"], k=cfg["k"], bands=cfg["bands"], n_grps=cfg["n_grps"],
             version=version, **kwargs,
         )
     if family == "lsh":
-        return sim.lsh_index_probe(
-            spark, path, probe_input, cfg["dim"],
-            planes=cfg["planes"], tables=cfg["tables"],
-            version=version, **kwargs,
-        )
+        return vx.lsh_vindex_probe(spark, path, probe_input, version=version, **kwargs)
     if family == "ivf":
-        return sim.ivf_index_probe(
-            spark, path, probe_input,
-            n_cells=cfg.get("n_cells", 8), version=version, **kwargs,
-        )
-    return sim.ivfpq_index_probe(
-        spark, path, probe_input, dim=cfg["dim"],
-        n_cells=cfg.get("n_cells", 8), m_sub=cfg.get("m_sub", 8),
-        n_cent=cfg.get("n_cent", 16), version=version, **kwargs,
-    )
+        return vx.ivf_vindex_probe(spark, path, probe_input, version=version, **kwargs)
+    return vx.ivfpq_vindex_probe(spark, path, probe_input, version=version, **kwargs)
 
 
-def index_compact(
-    spark, path: str, protocol: str | None = None, fingerprint: str = ""
-):
-    """Compact an index (snapshot: CAS rewrite commit; marker:
-    rename-swap with a RESET census line in the history sidecar)."""
-    family, cfg = _family_config(path, protocol)
-    proto = _check(family, protocol)
-    if proto == "snapshot":
-        from uts_spark.functions import vindex as vx
+def index_compact(spark, path: str, fingerprint: str = "") -> int:
+    """Compact an index (one CAS rewrite commit)."""
+    _family_config(path)
+    from uts_spark.functions import vindex as vx
 
-        return vx.vindex_compact_auto(spark, path, fingerprint=fingerprint)
-    from uts_spark.sources.sinks import compact_partitioned
-
-    part_cols = {
-        "minhash": ["band", "grp"],
-        "lsh": ["table", "bucket"],
-        "ivf": ["cell"],
-        "ivfpq": ["cell"],
-    }[family]
-    return compact_partitioned(spark, path, part_cols)
+    return vx.vindex_compact_auto(spark, path, fingerprint=fingerprint)
 
 
 def index_service_tick(
@@ -335,16 +161,14 @@ def index_service_tick(
     batch: DataFrame,
     path: str,
     batch_id: int,
-    protocol: str | None = None,
     fingerprint: str = "",
     stream_id: str | None = None,
     **config,
 ) -> dict:
     """One SERVICE TICK through the facade: fold a micro-batch into the
     index exactly-once AND run the family's control loop — the verb a
-    streaming foreachBatch actually wants, protocol- and
-    family-agnostic (the CRUD facade above covers the verbs; this
-    covers the loops):
+    streaming foreachBatch actually wants, family-agnostic (the CRUD
+    facade above covers the verbs; this covers the loops):
 
     - ivf    -> drift tick (per-batch quantizer fit committed with the
                 data; recluster fired at the measured 0.82 flag);
@@ -359,188 +183,60 @@ def index_service_tick(
                 rather than inventing a loop).
 
     Family and config resolve from the index's own manifest. Returns
-    the family tick's stats dict (plus ``family``/``protocol`` keys).
-    Thresholds stay overridable through ``config`` (recluster_milli /
+    the family tick's stats dict (plus a ``family`` key). Thresholds
+    stay overridable through ``config`` (recluster_milli /
     distortion_milli / cap / skew_milli)."""
-    family, cfg = _family_config(path, protocol)
-    proto = _check(family, protocol)
-    if proto == "snapshot":
-        from uts_spark.functions import vindex as vx
+    family, cfg = _family_config(path)
+    from uts_spark.functions import vindex as vx
 
-        if family == "ivf":
-            out = vx.ivf_vindex_ingest_tick(
-                spark, batch, path, batch_id, fingerprint=fingerprint,
-                stream_id=stream_id, **config,
-            )
-        elif family == "ivfpq":
-            out = vx.ivfpq_vindex_ingest_tick(
-                spark, batch, path, batch_id, fingerprint=fingerprint,
-                stream_id=stream_id, **config,
-            )
-        elif family == "minhash":
-            out = vx.minhash_vindex_ingest_tick(
-                spark, batch, config.pop("text_col"), config.pop("id_col"),
-                path, batch_id, fingerprint=fingerprint,
-                stream_id=stream_id,
-                n=cfg["n"], k=cfg["k"], bands=cfg["bands"],
-                n_grps=cfg["n_grps"], **config,
-            )
-        else:
-            ver = vx.lsh_vindex_append(
-                batch, path, cfg["dim"], fingerprint=fingerprint,
-                planes=cfg["planes"], tables=cfg["tables"],
-                batch_id=batch_id, stream_id=stream_id, **config,
-            )
-            out = {"version": ver, "monitor": "none"}
+    if family == "ivf":
+        out = vx.ivf_vindex_ingest_tick(
+            spark, batch, path, batch_id, fingerprint=fingerprint,
+            stream_id=stream_id, **config,
+        )
+    elif family == "ivfpq":
+        out = vx.ivfpq_vindex_ingest_tick(
+            spark, batch, path, batch_id, fingerprint=fingerprint,
+            stream_id=stream_id, **config,
+        )
+    elif family == "minhash":
+        out = vx.minhash_vindex_ingest_tick(
+            spark, batch, config.pop("text_col"), config.pop("id_col"),
+            path, batch_id, fingerprint=fingerprint,
+            stream_id=stream_id,
+            n=cfg["n"], k=cfg["k"], bands=cfg["bands"],
+            n_grps=cfg["n_grps"], **config,
+        )
     else:
-        from uts_spark.functions import dedup as dd
-        from uts_spark.functions import similarity as sim
-
-        if family == "ivf":
-            out = sim.ivf_index_ingest_tick(
-                spark, batch, path, batch_id,
-                n_cells=cfg.get("n_cells", 8), **config,
-            )
-        elif family == "minhash":
-            out = dd.minhash_ingest_tick(
-                spark, batch, config.pop("text_col"), config.pop("id_col"),
-                path, batch_id,
-                n=cfg["n"], k=cfg["k"], bands=cfg["bands"],
-                n_grps=cfg["n_grps"], **config,
-            )
-        else:
-            raise ValueError(
-                f"marker protocol has no {family} service tick — the "
-                "snapshot protocol carries the full monitor matrix "
-                "(and is the measured default); use "
-                "protocol='snapshot' or the plain append verbs"
-            )
-    return {**out, "family": family, "protocol": proto}
+        ver = vx.lsh_vindex_append(
+            batch, path, cfg["dim"], fingerprint=fingerprint,
+            planes=cfg["planes"], tables=cfg["tables"],
+            batch_id=batch_id, stream_id=stream_id, **config,
+        )
+        out = {"version": ver, "monitor": "none"}
+    return {**out, "family": family}
 
 
-def _family_config(path: str, protocol: str | None) -> tuple[str, dict]:
-    """Resolve (family, config) from the index's own manifest so the
-    caller never re-states what the index already knows. The snapshot
-    manifest records ``family`` explicitly; the marker manifest's
-    config keys identify it (n/k/bands -> minhash, planes/tables ->
-    lsh, m_sub -> ivfpq, else ivf — the same shape-inference
-    vindex_migrate uses)."""
-    proto = protocol or DEFAULT_PROTOCOL
-    if proto == "snapshot":
-        from uts_spark.functions.vindex import _current_manifest
-
-        pm = _current_manifest(path)
-        fam = pm.get("family")
-        if fam not in _FAMILIES:
-            raise ValueError(f"snapshot index at {path}: unknown family {fam!r}")
-        return fam, pm
-    from uts_spark.functions.dedup import index_manifest_read
-
-    cfg = index_manifest_read(path) or {}
-    if cfg.get("family") in _FAMILIES:
-        return cfg["family"], cfg
-    if "bands" in cfg and "n" in cfg:
-        return "minhash", cfg
-    if "m_sub" in cfg:
-        return "ivfpq", cfg
-    if "planes" in cfg and "tables" in cfg:
-        return "lsh", cfg
-    import os
-
-    if os.path.exists(os.path.join(path, "_centroids")):
-        if os.path.exists(os.path.join(path, "_codebook")):
-            return "ivfpq", {"dim": 64, **cfg}
-        return "ivf", cfg
-    raise ValueError(
-        f"marker index at {path}: cannot infer family from manifest config "
-        f"keys {sorted(cfg)} — pass explicit config or use the family verbs"
-    )
-
-
-def _detect_index_protocol(path: str) -> str:
-    """Which commit protocol owns the index at ``path``: a committed
-    snapshot manifest chain wins; otherwise a marker-family manifest;
-    otherwise this is not an index we know how to address."""
+def _family_config(path: str) -> tuple[str, dict]:
+    """Resolve (family, config) from the index's current snapshot
+    manifest so the caller never re-states what the index already
+    knows. A path with no manifest chain — nothing there, or an index
+    in the retired marker layout — raises ValueError naming
+    :func:`vindex.vindex_migrate` instead of guessing."""
     from uts_spark.sources.versioned import list_versions
 
-    if list_versions(path):
-        return "snapshot"
-    from uts_spark.functions.dedup import index_manifest_read
-
-    if index_manifest_read(path) is not None:
-        return "marker"
-    raise ValueError(
-        f"index at {path}: neither a snapshot manifest chain nor a "
-        "marker manifest found - not an index this facade can erase"
-    )
-
-
-def _marker_locate(spark, family, cfg, deleted_rows, text_col, id_col, vec_col, path):
-    """(located rows, partition cols, located id col) for a MARKER
-    index: re-derive ONLY the deleted rows' partitions with the same
-    kernels the family's delete verb uses — the audit then scans just
-    those partitions, never the index."""
-    from pyspark.sql import functions as F
-
-    if family == "minhash":
-        from uts_spark.functions.dedup import (
-            _band_bucket_rows,
-            doc_shingle_arrays_portable,
-            minhash_signatures_portable,
+    versions = list_versions(path)
+    if not versions:
+        raise ValueError(
+            f"index at {path}: no snapshot manifest chain — an index in "
+            "the legacy marker layout must be upgraded with "
+            "vindex.vindex_migrate before this verb can address it"
         )
-
-        k = cfg.get("k", 32)
-        arrays = doc_shingle_arrays_portable(
-            deleted_rows, text_col, id_col, cfg.get("n", 3)
-        )
-        sig = minhash_signatures_portable(arrays, k)
-        rows = _band_bucket_rows(sig, k, cfg.get("bands", 8)).select(
-            "id",
-            "band",
-            F.pmod(
-                F.xxhash64("bucket"), F.lit(cfg.get("n_grps", 16))
-            ).alias("grp"),
-        )
-        return rows, ["band", "grp"], "id"
-    if family == "lsh":
-        from uts_spark.functions.similarity import lsh_bucket_table
-
-        located = lsh_bucket_table(
-            deleted_rows, cfg["dim"], cfg.get("planes", 8),
-            cfg.get("tables", 2), id_col, vec_col,
-        ).select(id_col, "table", "bucket")
-        return located, ["table", "bucket"], id_col
-    import os
-
-    from uts_spark.functions.similarity import _ivf_assign
-
-    cents = spark.read.parquet(os.path.join(path, "_centroids"))
-    located = _ivf_assign(deleted_rows, cents, id_col, vec_col).select(
-        id_col, "cell"
-    )
-    return located, ["cell"], id_col
-
-
-def _touched_partition_filter(located, part_cols):
-    """(flat partition-pruning Column over the touched partitions,
-    touched count) — the same combined-key In-list shape as
-    sinks.delete_from_partitioned (an OR-chain of conjunctions
-    StackOverflows the expression converter at a few hundred keys)."""
-    from pyspark.sql import functions as F
-
-    touched = sorted(
-        tuple(int(r[c]) if not isinstance(r[c], str) else r[c] for c in part_cols)
-        for r in located.select(*part_cols).distinct().collect()
-    )
-    if not touched:
-        return None, 0
-    if len(part_cols) == 1:
-        return F.col(part_cols[0]).isin([key[0] for key in touched]), len(touched)
-    combined = F.concat_ws("/", *[F.col(c).cast("string") for c in part_cols])
-    return (
-        combined.isin(["/".join(str(v) for v in key) for key in touched]),
-        len(touched),
-    )
+    pm = versions[-1]
+    fam = pm.get("family")
+    if fam not in _FAMILIES:
+        raise ValueError(f"snapshot index at {path}: unknown family {fam!r}")
+    return fam, pm
 
 
 def erase_everywhere(
@@ -549,41 +245,32 @@ def erase_everywhere(
     index_paths: list[str],
     table_specs: list[tuple[str, str]] | None = None,
     fingerprint: str = "",
-    deleted_rows=None,
-    text_col: str = "text",
-    vec_col: str = "embedding",
     table_mode: str = "cow",
     index_mode: str = "cow",
 ) -> list[dict]:
     """FACADE-LEVEL GDPR: one call erases a takedown batch from every
-    index — SNAPSHOT indexes (family dispatched off each manifest, all
-    four routes through the pruned copy-on-write kernel) and MARKER
-    indexes (protocol detected per path; dispatched through the
-    family delete verbs, which need the deleted rows' CONTENT — pass
-    ``deleted_rows`` carrying id + text/vector columns, or the call
-    refuses loudly) — AND every versioned data table (``table_specs``
-    = (path, key_col) pairs; dir-stats-pruned when the table opted in
-    at write time). Then it AUDITS itself at the erasure's own pruned
-    shape (VERDICT r9 #1 — the first audit full-scanned every target):
+    index (family dispatched off each manifest, all four routes
+    through the pruned copy-on-write kernel) AND every versioned data
+    table (``table_specs`` = (path, key_col) pairs; dir-stats-pruned
+    when the table opted in at write time). Bare ids suffice. Then it
+    AUDITS itself at the erasure's own pruned shape (VERDICT r9 #1 —
+    the first audit full-scanned every target): survivors can only
+    live in the dirs the delete REWROTE (untouched dirs were excluded
+    by the manifest's min/max stats, carried dirs by reference are
+    unchanged bytes) — so the audit left-semi probes ONLY the
+    rewritten dirs, and ``rows_after`` folds from the committed
+    manifest's ``n_rows``, no scan.
 
-    - snapshot indexes / tables: survivors can only live in the dirs
-      the delete REWROTE (untouched dirs were excluded by the
-      manifest's min/max stats, carried dirs by reference are
-      unchanged bytes) — so the audit left-semi probes ONLY the
-      rewritten dirs, and ``rows_after`` folds from the committed
-      manifest's ``n_rows``, no scan;
-    - marker indexes: the deleted rows re-locate to their partitions
-      (same kernels as the delete verb) and the audit scans only the
-      touched partitions behind a flat partition filter.
+    Every index path is checked before anything is erased: a path
+    without a snapshot manifest chain raises ValueError naming
+    ``vindex_migrate``, so a takedown never half-applies.
 
-    Returns one accounting dict per target: {target, kind, protocol,
+    Returns one accounting dict per target: {target, kind,
     family|key, version, rows_after, rows_removed, leaked,
     audited_dirs}. ``leaked`` must be 0 everywhere; a compliance pass
     that doesn't verify its own writes is a report, not an erasure.
-    ``rows_after``/``version`` are None on marker targets (no manifest
-    row census; the history sidecar records a RESET instead). Cost:
-    sum of touched dirs/partitions across all targets — never the sum
-    of index or table sizes; the audit now has the same bound.
+    Cost: sum of touched dirs across all targets — never the sum of
+    index or table sizes; the audit has the same bound.
 
     ``table_mode="mor"`` (round 10) routes table targets through
     MERGE-ON-READ deletion vectors instead of the copy-on-write
@@ -595,15 +282,10 @@ def erase_everywhere(
     at the committed version (the pruned point-lookup applies the new
     vector — a vector that failed to mask shows up as leaked > 0);
     cost = the admitting dirs, same bound as the erase's own count
-    scan. ``index_mode="mor"`` does the same for SNAPSHOT indexes
+    scan. ``index_mode="mor"`` does the same for indexes
     (vindex_delete_mor — probes mask through read_version; audit =
-    vindex_read_rows_for_ids at the committed version); marker
-    indexes have no vector machinery and always erase copy-on-write
-    regardless."""
-    from uts_spark.functions.vindex import (
-        _current_manifest,
-        vindex_delete_auto,
-    )
+    vindex_read_rows_for_ids at the committed version)."""
+    from uts_spark.functions.vindex import vindex_delete_auto
     from uts_spark.sources.versioned import (
         delete_rows,
         delete_rows_mor,
@@ -615,93 +297,51 @@ def erase_everywhere(
     for nm, md in (("table_mode", table_mode), ("index_mode", index_mode)):
         if md not in ("cow", "mor"):
             raise ValueError(f"{nm} {md!r} not supported (cow | mor)")
+    parents = [_family_config(path) for path in index_paths]
     out: list[dict] = []
-    for path in index_paths:
-        proto = _detect_index_protocol(path)
-        if proto == "snapshot":
-            pm = _current_manifest(path)
-            fam = pm.get("family")
-            idc = pm.get("id_col") or ("id" if fam == "minhash" else "vec_id")
-            parent_dirs = set(_manifest_dirs(pm))
-            ver = vindex_delete_auto(
-                spark, deleted_ids, path, fingerprint=fingerprint,
-                mode=index_mode,
-            )
-            m2 = {m["version"]: m for m in list_versions(path)}[ver]
-            idf = (
-                deleted_ids.toDF(idc)
-                if len(deleted_ids.columns) == 1
-                else deleted_ids.select(idc)
-            )
-            if index_mode == "mor":
-                from uts_spark.functions.vindex import (
-                    _stats_admitting,
-                    vindex_read_rows_for_ids,
-                )
-
-                # pruned masked re-read of the erased ids: any
-                # surviving row is a real leak
-                leaked = vindex_read_rows_for_ids(
-                    spark, path, idf, version=ver
-                ).count()
-                audited = len(_stats_admitting(spark, m2, idf, idc))
-            else:
-                rewritten = [
-                    d for d in _manifest_dirs(m2) if d not in parent_dirs
-                ]
-                leaked = (
-                    spark.read.parquet(*rewritten)
-                    .join(idf, idc, "left_semi")
-                    .count()
-                    if rewritten
-                    else 0
-                )
-                audited = len(rewritten)
-            out.append({
-                "target": path, "kind": "index", "protocol": "snapshot",
-                "family": fam, "version": ver,
-                "rows_after": m2["n_rows"],
-                "rows_removed": pm["n_rows"] - m2["n_rows"],
-                "leaked": leaked, "audited_dirs": audited,
-            })
-            continue
-        fam, cfg = _family_config(path, "marker")
-        if deleted_rows is None:
-            raise ValueError(
-                f"marker index at {path}: the marker delete verbs "
-                "re-derive partitions from the deleted rows' content - "
-                "pass deleted_rows= (id + text/vector columns); bare "
-                "ids only suffice for snapshot indexes and tables"
-            )
-        idc = deleted_ids.columns[0]
-        if fam == "minhash":
-            removed = index_delete(
-                spark, deleted_rows, path, protocol="marker",
-                fingerprint=fingerprint, text_col=text_col, id_col=idc,
-            )
-        else:
-            removed = index_delete(
-                spark, deleted_rows, path, protocol="marker",
-                fingerprint=fingerprint, id_col=idc, vec_col=vec_col,
-            )
-        located, part_cols, loc_id = _marker_locate(
-            spark, fam, cfg, deleted_rows, text_col, idc, vec_col, path
+    for path, (fam, pm) in zip(index_paths, parents):
+        idc = pm.get("id_col") or ("id" if fam == "minhash" else "vec_id")
+        parent_dirs = set(_manifest_dirs(pm))
+        ver = vindex_delete_auto(
+            spark, deleted_ids, path, fingerprint=fingerprint,
+            mode=index_mode,
         )
-        cond, n_touched = _touched_partition_filter(located, part_cols)
-        if cond is None:
-            leaked = 0
-        else:
-            leaked = (
-                spark.read.parquet(path)
-                .filter(cond)
-                .join(located.select(loc_id).distinct(), loc_id, "left_semi")
-                .count()
+        m2 = {m["version"]: m for m in list_versions(path)}[ver]
+        idf = (
+            deleted_ids.toDF(idc)
+            if len(deleted_ids.columns) == 1
+            else deleted_ids.select(idc)
+        )
+        if index_mode == "mor":
+            from uts_spark.functions.vindex import (
+                _stats_admitting,
+                vindex_read_rows_for_ids,
             )
+
+            # pruned masked re-read of the erased ids: any surviving
+            # row is a real leak
+            leaked = vindex_read_rows_for_ids(
+                spark, path, idf, version=ver
+            ).count()
+            audited = len(_stats_admitting(spark, m2, idf, idc))
+        else:
+            rewritten = [
+                d for d in _manifest_dirs(m2) if d not in parent_dirs
+            ]
+            leaked = (
+                spark.read.parquet(*rewritten)
+                .join(idf, idc, "left_semi")
+                .count()
+                if rewritten
+                else 0
+            )
+            audited = len(rewritten)
         out.append({
-            "target": path, "kind": "index", "protocol": "marker",
-            "family": fam, "version": None, "rows_after": None,
-            "rows_removed": removed, "leaked": leaked,
-            "audited_dirs": n_touched,
+            "target": path, "kind": "index",
+            "family": fam, "version": ver,
+            "rows_after": m2["n_rows"],
+            "rows_removed": pm["n_rows"] - m2["n_rows"],
+            "leaked": leaked, "audited_dirs": audited,
         })
     for path, key in table_specs or []:
         idf = (
@@ -728,7 +368,7 @@ def erase_everywhere(
                 len(_manifest_dirs(m2)) if admit is None else sum(admit)
             )
             out.append({
-                "target": path, "kind": "table", "protocol": "snapshot",
+                "target": path, "kind": "table",
                 "key": key, "version": ver,
                 "rows_after": m2["n_rows"],
                 "rows_removed": pm["n_rows"] - m2["n_rows"],
@@ -748,7 +388,7 @@ def erase_everywhere(
         else:
             leaked = 0
         out.append({
-            "target": path, "kind": "table", "protocol": "snapshot",
+            "target": path, "kind": "table",
             "key": key, "version": ver,
             "rows_after": m2["n_rows"],
             "rows_removed": pm["n_rows"] - m2["n_rows"],

@@ -1,7 +1,8 @@
 """Snapshot-committed index maintenance (VERDICT r8 #4, completed for
 ALL FOUR index families in round 9): full index CRUD routed through the
 versioned table's ATOMIC MANIFEST COMMIT (sources/versioned.py) instead
-of the rename-swap + O_EXCL pending-marker protocol.
+of the rename-swap + O_EXCL pending-marker protocol (retired: every
+index family now commits here; see functions/index_protocol.py).
 
 Why this exists: the marker protocol is POSIX-local-FS only — object
 storage has no rename and no O_EXCL, so at 100 TB none of those
@@ -1279,9 +1280,8 @@ def ivf_vindex_ingest_tick(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> dict:
-    """One CLOSED-LOOP micro-batch of the SNAPSHOT vector ingest — the
-    vindex port of similarity.ivf_index_ingest_tick, with the whole
-    monitor state living ON the manifests instead of sidecar files:
+    """One CLOSED-LOOP micro-batch of the SNAPSHOT vector ingest, with
+    the whole monitor state living ON the manifests:
 
     1. APPEND exactly-once with ``record_fit`` — the batch's quantizer
        fit (exact ints against the centroids the delta was encoded
@@ -2377,10 +2377,9 @@ def minhash_vindex_ingest_tick(
     bands: int = 8,
     n_grps: int = 16,
 ) -> dict:
-    """One CLOSED-LOOP micro-batch of the SNAPSHOT dedup ingest — the
-    vindex port of dedup.minhash_ingest_tick, with the whole monitor
-    on manifests: the build commits the organic collision reference
-    (``coll_ref``), each tick's batch-collision ints commit atomically
+    """One CLOSED-LOOP micro-batch of the SNAPSHOT dedup ingest, with
+    the whole monitor on manifests: the build commits the organic
+    collision reference (``coll_ref``), each tick's batch-collision ints commit atomically
     WITH its data, the flag cross-multiplies exact integers against
     the carried reference (the live row count is the parent manifest's
     own ``n_rows`` — no counter file to maintain), and the corrective

@@ -1539,6 +1539,67 @@ def _register_stream_quality_model():
 stream_quality_model_replay = _register_stream_quality_model()
 
 
+def _stream_fold(spark, path, fp0, fp1, build, batches, schema, fold):
+    """Shared ingest loop of the index replay lanes, all on the
+    SNAPSHOT protocol: an absent, torn or foreign index (fingerprint
+    neither ``fp0`` nor ``fp1``) is rebuilt with ``build(fp0)``; then,
+    unless the index is already sealed at ``fp1``, ``batches`` arrive
+    as a file stream and foreachBatch calls ``fold(bdf, bid, fp,
+    run_id)`` per micro-batch. The first frame's files exist before the
+    stream starts; each later frame lands only after the previous one
+    drained (a start on an empty dir can commit an empty epoch and then
+    swallow two files into one batch — a monitor's flag decision
+    depends on the index state at measurement time, so each frame must
+    be its own epoch). Exactly-once is STRUCTURAL: a batch key rides on
+    the committed manifest (``run_id`` is a per-run stream id, so
+    replays within a run dedup even across a rewrite and a fresh run
+    never aliases the last). Ticks commit under ``fp0 + ":ingesting"``
+    and a MANIFEST-ONLY seal advances the fingerprint to ``fp1`` after
+    the stream drains — a run killed mid-stream leaves the ingest
+    fingerprint, and the next invocation rebuilds instead of serving a
+    half-folded index."""
+    from uts_spark.functions.vindex import vindex_config, vindex_seal
+
+    m = vindex_config(path)
+    state = m["fingerprint"] if m else None
+    if state not in (fp0, fp1):
+        if os.path.exists(path):
+            shutil.rmtree(path)
+        build(fp0)
+        state = fp0
+    if state != fp0:
+        return
+    fp_ing = fp0 + ":ingesting"
+    scratch = tempfile.mkdtemp(prefix="uts_ingest_")
+    try:
+        src = os.path.join(scratch, "src")
+        chk = os.path.join(scratch, "chk")
+        batches[0].write.parquet(src)
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        run_id = uuid.uuid4().hex[:8]
+        q = (
+            stream.writeStream.foreachBatch(
+                lambda bdf, bid: fold(bdf, bid, fp_ing, run_id)
+            )
+            .option("checkpointLocation", chk)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            for b in batches[1:]:
+                b.write.mode("append").parquet(src)
+                q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+    vindex_seal(path, fp1)
+
+
 def _register_stream_dedup_ingest():
     # the post-ingest index covers exactly what the batch APPEND lane's
     # does, so its oracle is reused verbatim (llm_ops loads first, so
@@ -1552,26 +1613,19 @@ def _register_stream_dedup_ingest():
     def stream_dedup_index_ingest_replay(spark, sf_dir):
         """The dedup service's INGEST LOOP as Structured Streaming:
         batch-1 docs arrive as 4 micro-batches, and foreachBatch folds
-        each one into the persisted band index via
-        functions/dedup.minhash_index_append — batch-sized sketching
-        per tick, clustered partition-aligned appends (one file per
-        touched directory per tick). After the stream drains, the
-        manifest fingerprint bumps and batch-2 probes the updated
-        index. The final index row multiset is independent of the
-        micro-batch boundaries (each append sketches only its rows), so
-        the probe hash-matches the BATCH append lane's oracle exactly.
-        Idempotent across runs via the same manifest chain; a re-run
-        sees fp(base + batch1) and skips straight to the probe."""
-        import os
-        import shutil
-        import tempfile
-
-        from uts_spark.functions.dedup import (
-            index_state,
-            index_tick,
-            minhash_index_append_idempotent,
-            minhash_index_probe,
-            minhash_index_write,
+        each one into the snapshot band index via the batch-keyed
+        exactly-once functions/vindex.minhash_vindex_append —
+        batch-sized sketching and one delta dir + O(1) manifest commit
+        per tick. After the stream drains, a seal advances the
+        fingerprint and batch-2 probes the updated index. The final
+        index row multiset is independent of the micro-batch
+        boundaries (each append sketches only its rows), so the probe
+        hash-matches the BATCH append lane's oracle exactly. A re-run
+        sees the sealed fingerprint and skips straight to the probe."""
+        from uts_spark.functions.vindex import (
+            minhash_vindex_append,
+            minhash_vindex_build,
+            minhash_vindex_probe,
         )
         from uts_spark.queries.llm_ops import (
             _MIDX_BANDS,
@@ -1597,57 +1651,19 @@ def _register_stream_dedup_ingest():
         fp0, fp1 = _frame_fingerprint(base), _frame_fingerprint(old)
         cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
         path = minhash_index_path(sf_dir, fp0, **cfg) + "_stream"
-
-        state = index_state(path)  # None when a crashed run left _PENDING
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            minhash_index_write(
-                base, "text", "doc_id", path, fingerprint=fp0, **cfg
-            )
-            state = fp0
-        if state == fp0:
-            # the streaming ingest: 4 files -> 4 micro-batch appends,
-            # run as ONE pending-marker tick (ADVICE r7): a run killed
-            # mid-stream leaves _PENDING, so the next invocation
-            # rebuilds instead of re-appending over a torn index. (The
-            # component-level checkpoint-resume path — cheap recovery
-            # without a rebuild — is pinned separately in
-            # tests/test_streaming.py.)
-            def _ingest():
-                scratch = tempfile.mkdtemp(prefix="uts_ingest_")
-                try:
-                    src = os.path.join(scratch, "src")
-                    chk = os.path.join(scratch, "chk")
-                    b1.select("doc_id", "text").repartition(4).write.parquet(src)
-                    stream = (
-                        spark.readStream.schema("doc_id long, text string")
-                        .option("maxFilesPerTrigger", 1)
-                        .parquet(src)
-                    )
-                    q = (
-                        stream.writeStream.foreachBatch(
-                            # batch-id-keyed idempotent append: a batch
-                            # replayed after a mid-epoch crash converges
-                            # to the same physical index (VERDICT r7 #6;
-                            # checkpoint-restart pin in test_streaming)
-                            lambda bdf, bid: minhash_index_append_idempotent(
-                                bdf, "text", "doc_id", path, bid, **cfg
-                            )
-                        )
-                        .option("checkpointLocation", chk)
-                        .start()
-                    )
-                    try:
-                        q.processAllAvailable()
-                    finally:
-                        q.stop()
-                finally:
-                    shutil.rmtree(scratch, ignore_errors=True)
-
-            index_tick(path, fp1, _ingest, **cfg)
-
-        return minhash_index_probe(
+        _stream_fold(
+            spark, path, fp0, fp1,
+            lambda f: minhash_vindex_build(
+                base, "text", "doc_id", path, fingerprint=f, **cfg
+            ),
+            [b1.select("doc_id", "text").repartition(4)],
+            "doc_id long, text string",
+            lambda bdf, bid, f, run: minhash_vindex_append(
+                bdf, "text", "doc_id", path, fingerprint=f,
+                batch_id=bid, stream_id=run, **cfg,
+            ),
+        )
+        return minhash_vindex_probe(
             spark, path, b2, old, "text", "doc_id",
             threshold=_MIDX_THR, **cfg,
         )
@@ -1712,87 +1728,14 @@ def _register_stream_ann_ingest():
         """The VECTOR service's INGEST LOOP as Structured Streaming
         (the ANN sibling of stream_dedup_index_ingest_replay): new
         embeddings arrive as 4 micro-batches and foreachBatch folds
-        each into the persisted cell-partitioned IVF index via the
-        batch-id-keyed EXACTLY-ONCE append
-        (similarity.ivf_index_append_idempotent — frozen-centroid
-        assignment + the shared staged-publish kernel, so a replayed
-        epoch converges instead of duplicating vectors). The whole
-        stream runs as one pending-marker tick; after it drains the
-        manifest bumps and anchors probe the updated index with the
-        frozen centroids. Final index rows are independent of
-        micro-batch boundaries, so the probe hash-matches the batch
-        append lane's oracle verbatim."""
-        import os
-        import shutil
-        import tempfile
-
-        from uts_spark.functions.dedup import (
-            index_manifest_write,
-            index_state,
-            index_tick,
-        )
-        from uts_spark.functions.similarity import (
-            ivf_index_append_idempotent,
-            ivf_index_probe,
-            ivf_index_write,
-        )
-        from uts_spark.queries.llm_ops import (
-            _IVF_APP_MOD,
-            _IVF_APP_REM,
-            _emb_frame_fingerprint,
-            ivf_index_path,
-        )
-
-        e = table(spark, sf_dir, "embeddings")
-        base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
-        batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-        fp0, fp1 = _emb_frame_fingerprint(base), _emb_frame_fingerprint(e)
-        path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_ingest"
-
-        state = index_state(path)
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            ivf_index_write(base, path, n_cells=8)
-            index_manifest_write(path, fp0, n_cells=8)
-            state = fp0
-        if state == fp0:
-
-            def _ingest():
-                scratch = tempfile.mkdtemp(prefix="uts_ann_ingest_")
-                try:
-                    src = os.path.join(scratch, "src")
-                    chk = os.path.join(scratch, "chk")
-                    batch.select("vec_id", "embedding").repartition(
-                        4
-                    ).write.parquet(src)
-                    stream = (
-                        spark.readStream.schema(
-                            "vec_id long, embedding array<float>"
-                        )
-                        .option("maxFilesPerTrigger", 1)
-                        .parquet(src)
-                    )
-                    q = (
-                        stream.writeStream.foreachBatch(
-                            lambda bdf, bid: ivf_index_append_idempotent(
-                                spark, bdf, path, bid
-                            )
-                        )
-                        .option("checkpointLocation", chk)
-                        .start()
-                    )
-                    try:
-                        q.processAllAvailable()
-                    finally:
-                        q.stop()
-                finally:
-                    shutil.rmtree(scratch, ignore_errors=True)
-
-            index_tick(path, fp1, _ingest, n_cells=8)
-
-        anchors = e.filter(F.col("vec_id") < 5)
-        return ivf_index_probe(spark, path, anchors, None, k=10, n_probe=3)
+        each into the snapshot IVF index with the batch-keyed
+        exactly-once append against the frozen centroids
+        (:func:`_ann_vindex_ingest`); after the stream drains a seal
+        advances the fingerprint and anchors probe the updated index.
+        Final index rows are independent of micro-batch boundaries,
+        so the probe hash-matches the batch append lane's oracle
+        verbatim."""
+        return _ann_vindex_ingest(spark, sf_dir, "_ingest")
 
     return stream_ann_index_ingest_replay
 
@@ -1907,153 +1850,30 @@ def _register_stream_ann_drift_recluster():
     def stream_ann_ingest_drift_recluster_replay(spark, sf_dir):
         """The vector service's ingest loop with the DRIFT CONTROL
         LOOP CLOSED (VERDICT r8 #3): each micro-batch runs
-        similarity.ivf_index_ingest_tick — measure the batch's
-        quantizer fit against the frozen centroids (exact integers,
-        recorded ON the tick's history line), exactly-once append,
-        and re-cluster over the index's own contents when the
-        measured 0.82 flag fires. The corpus is the DERIVED clustered
-        one (see the registration comment — the fixture embeddings
-        are diffuse, so their fit floor IS the random level and no
-        exact transform can trip the flag at both gate SFs; clustered
-        data is also the regime the monitor exists for). Micro-batch
-        1 (vectors joining the BASE clusters) records fit ratio ~1.0
-        and does NOT trip the flag; micro-batch 2 (clusters on
-        components 56..63, orthogonal to every frozen centroid)
-        measures ~0.07 and trips it, and the corrective recluster
-        runs UNDER the stream's pending marker (the marker and the
-        version-history chain both carry across the rebuild swap;
-        stale pins raise 'predates the rewrite'). The final index
-        therefore equals a FRESH build over the full
-        drifted corpus — the oracle recomputes exactly that probe.
-        Tick sequencing is two processAllAvailable barriers (write
-        batch-1 file, drain, write batch-2, drain): the flag decision
-        depends on WHICH centroids are frozen at measurement time, so
-        the replay pins a deterministic order instead of racing file
-        discovery. Scale: ticks stay batch-shaped until a flag fires;
-        the recluster is the one full-build the monitor exists to
-        amortize (measured 15x cheaper to monitor than to recluster
-        blindly, SCALE.md round 8)."""
-        from uts_spark.functions.dedup import (
-            index_manifest_write,
-            index_state,
-            index_tick,
-        )
-        from uts_spark.functions.similarity import (
-            ivf_fit_ref_write,
-            ivf_index_fit_ints,
-            ivf_index_ingest_tick,
-            ivf_index_probe,
-            ivf_index_write,
-        )
-        from uts_spark.queries.llm_ops import (
-            _DRIFT_ANCHOR_IDS,
-            _emb_frame_fingerprint,
-            ivf_index_path,
-        )
-
-        def dvec(id_col, center_col):
-            # exact at every SF: 8.0 at the cluster component plus
-            # 1/16-grid jitter everywhere (mirrors _dvec_sql verbatim)
-            return F.transform(
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda j: (
-                    ((id_col * 31 + j * 7) % 16 - 8).cast("double")
-                    / F.lit(16.0)
-                )
-                + F.when(j == center_col, F.lit(8.0)).otherwise(F.lit(0.0)),
-            )
-
-        e = table(spark, sf_dir, "embeddings")
-        base = e.filter(
-            F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
-        ).select(
-            "vec_id",
-            dvec(F.col("vec_id"), F.col("vec_id") % 8).alias("embedding"),
-        )
-        moved = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-        rid = (F.col("vec_id") + F.lit(_DRIFT_ID0))
-        b1 = moved.filter(F.col("vec_id") % 20 == 7).select(
-            rid.alias("vec_id"),
-            dvec(rid, rid % 8).alias("embedding"),
-        )
-        b2 = moved.filter(F.col("vec_id") % 20 == 17).select(
-            rid.alias("vec_id"),
-            dvec(rid, F.lit(56) + rid % 8).alias("embedding"),
-        )
-        corpus = base.unionAll(b1).unionAll(b2)
-
-        fp0 = _emb_frame_fingerprint(base)
-        fp1 = _emb_frame_fingerprint(corpus)
-        path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_drift"
-
-        state = index_state(path)
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            # freeze the build-time quantizer from the 8 PURE cluster
-            # centers (an 8-row frame — _ivf_centroids takes all of
-            # it), so the reference fit is the clustered regime's
-            # ~0.92, not a hash-sample's cluster-coverage lottery
-            centers = spark.range(8).select(
-                (F.col("id") + F.lit(9000)).alias("vec_id"),
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(63)),
-                    lambda j: F.when(
-                        j == F.col("id").cast("int"), F.lit(8.0)
-                    ).otherwise(F.lit(0.0)),
-                ).alias("embedding"),
-            )
-            ivf_index_write(base, path, n_cells=8, centroid_src=centers)
-            index_manifest_write(path, fp0, n_cells=8)
-            s, n = ivf_index_fit_ints(spark, base, path)
-            ivf_fit_ref_write(path, s, n)
-            state = fp0
-        if state == fp0:
-
-            def _ingest():
-                scratch = tempfile.mkdtemp(prefix="uts_drift_ingest_")
-                try:
-                    src = os.path.join(scratch, "src")
-                    chk = os.path.join(scratch, "chk")
-                    schema = "vec_id long, embedding array<double>"
-                    # deterministic tick order: batch 1's file exists
-                    # BEFORE the stream starts (a start on an empty
-                    # dir can commit an empty epoch and then swallow
-                    # both files into one batch — the flag decision
-                    # depends on which centroids are frozen at
-                    # measurement time, so each batch must be its own
-                    # epoch); batch 2 lands only after epoch 0 drains
-                    b1.coalesce(1).write.parquet(src)
-                    stream = (
-                        spark.readStream.schema(schema)
-                        .option("maxFilesPerTrigger", 1)
-                        .parquet(src)
-                    )
-                    q = (
-                        stream.writeStream.foreachBatch(
-                            lambda bdf, bid: ivf_index_ingest_tick(
-                                spark, bdf, path, bid
-                            )
-                        )
-                        .option("checkpointLocation", chk)
-                        .start()
-                    )
-                    try:
-                        q.processAllAvailable()
-                        b2.coalesce(1).write.mode("append").parquet(src)
-                        q.processAllAvailable()
-                    finally:
-                        q.stop()
-                finally:
-                    shutil.rmtree(scratch, ignore_errors=True)
-
-            index_tick(path, fp1, _ingest, n_cells=8)
-
-        anchors = corpus.filter(
-            (F.col("vec_id") < 3)
-            | F.col("vec_id").isin(list(_DRIFT_ANCHOR_IDS))
-        )
-        return ivf_index_probe(spark, path, anchors, None, k=10, n_probe=3)
+        vindex.ivf_vindex_ingest_tick — measure the batch's quantizer
+        fit against the frozen centroids (exact integers, committed
+        WITH the batch on its manifest), exactly-once append, and
+        re-cluster over the index's own contents when the measured
+        0.82 flag fires (:func:`_ann_vindex_drift`). The corpus is the
+        DERIVED clustered one (see the registration comment — the
+        fixture embeddings are diffuse, so their fit floor IS the
+        random level and no exact transform can trip the flag at both
+        gate SFs; clustered data is also the regime the monitor exists
+        for). Micro-batch 1 (vectors joining the BASE clusters)
+        records fit ratio ~1.0 and does NOT trip the flag;
+        micro-batch 2 (clusters on components 56..63, orthogonal to
+        every frozen centroid) measures ~0.07 and trips it, and the
+        corrective recluster is an ordinary rewrite commit. The final
+        index therefore equals a FRESH build over the full drifted
+        corpus — the oracle recomputes exactly that probe. Tick
+        sequencing is two processAllAvailable barriers (the flag
+        decision depends on WHICH centroids are frozen at measurement
+        time, so the replay pins a deterministic order instead of
+        racing file discovery). Scale: ticks stay batch-shaped until a
+        flag fires; the recluster is the one full-build the monitor
+        exists to amortize (measured 15x cheaper to monitor than to
+        recluster blindly, SCALE.md round 8)."""
+        return _ann_vindex_drift(spark, sf_dir, "_drift")
 
     return stream_ann_ingest_drift_recluster_replay
 
@@ -2064,9 +1884,9 @@ stream_ann_ingest_drift_recluster_replay = (
 
 
 # Measured skew-loop fixture constants (SCALE.md round 9b) — shared by
-# the marker lane, the snapshot (vindex) lane, and the facade-routed
-# lane below, so the three storage routes answer the SAME derived
-# corpus and the oracle is reused verbatim.
+# the two skew replay lanes and the facade-routed lane below, so the
+# three service instances answer the SAME derived corpus and the
+# oracle is reused verbatim.
 _SKEW_BOILER = (
     "breaking news subscribe to our newsletter terms of service "
     "apply all rights reserved"
@@ -2231,145 +2051,72 @@ def _register_stream_dedup_skew_cap():
     @query("stream_dedup_ingest_skew_cap_replay", oracle)
     def stream_dedup_ingest_skew_cap_replay(spark, sf_dir):
         """The dedup service's ingest loop with the SKEW CONTROL LOOP
-        closed: each micro-batch runs functions/dedup.minhash_ingest_tick
+        closed: each micro-batch runs vindex.minhash_vindex_ingest_tick
         — measure the batch's bucket-collision integers against the
-        live index (recorded ON the tick's history line), exactly-once
-        append, and QUARANTINE buckets above the cap when the measured
-        8x flag fires. Micro-batch 1 (an organic crawl slice) measures
-        0.63-0.94x the build reference and must NOT flag; micro-batch 2
-        (the same-size slice with its text replaced by one boilerplate
-        template) measures 475-5892x and trips the flag — the cap verb
-        moves the flood's band rows (45-454 per bucket vs organic max
-        2-3) to path/_quarantine and rewrites only their partitions,
-        under the stream's pending marker, with a history RESET line.
-        The probe batch then carries three proofs at once: organic
-        docs (normal candidacy), verbatim CLONES of indexed docs
-        (guaranteed jaccard-1.0 matches — the positive control at
-        every SF), and boilerplate clones (ZERO candidates — their
-        only collision buckets are quarantined; the negative control).
-        Oracle = the full recompute with the SAME bucket-size cap rule
-        in SQL: the quarantine is physical, the cap policy is the
-        semantics. Tick sequencing is two processAllAvailable barriers
-        (the flag decision depends on the index state at measurement
-        time). Scale: ticks are candidate-shaped (broadcast semi-join
-        on the batch's buckets); the cap rewrite touches only the hot
-        buckets' partitions."""
-        path = _ensure_capped_chain(spark, sf_dir)
-        from uts_spark.functions.dedup import minhash_index_probe
+        live index (committed WITH the batch on its manifest),
+        exactly-once append, and QUARANTINE buckets above the cap when
+        the measured 8x flag fires. Micro-batch 1 (an organic crawl
+        slice) measures 0.63-0.94x the build reference and must NOT
+        flag; micro-batch 2 (the same-size slice with its text
+        replaced by one boilerplate template) measures 475-5892x and
+        trips the flag — the cap verb moves the flood's band rows
+        (45-454 per bucket vs organic max 2-3) to a quarantine dir
+        that rides the manifest, as one CAS rewrite. The probe batch
+        then carries three proofs at once: organic docs (normal
+        candidacy), verbatim CLONES of indexed docs (guaranteed
+        jaccard-1.0 matches — the positive control at every SF), and
+        boilerplate clones (ZERO candidates — their only collision
+        buckets are quarantined; the negative control). Oracle = the
+        full recompute with the SAME bucket-size cap rule in SQL: the
+        quarantine is physical, the cap policy is the semantics. Tick
+        sequencing is two processAllAvailable barriers (the flag
+        decision depends on the index state at measurement time).
+        Scale: ticks are candidate-shaped (broadcast semi-join on the
+        batch's buckets); the cap is a rare flood response."""
+        return _skew_capped_probe(spark, sf_dir, "_skew")
 
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        base = docs.filter(
-            ~F.col("doc_id").__mod__(_MIDX_MOD).isin(
-                NORM_REM, BOIL_REM, PROBE_REM
-            )
-        )
-        b1 = docs.filter(F.col("doc_id") % _MIDX_MOD == NORM_REM)
-        boiler = docs.filter(F.col("doc_id") % _MIDX_MOD == BOIL_REM).select(
-            "doc_id", F.lit(BOILER).alias("text")
-        )
-        old = base.unionByName(b1).unionByName(boiler)
-        new = (
-            docs.filter(F.col("doc_id") % _MIDX_MOD == PROBE_REM)
-            .unionByName(
-                docs.filter(F.col("doc_id") % CLONE_MOD == 0).select(
-                    (F.col("doc_id") + F.lit(CLONE_OFF)).alias("doc_id"),
-                    "text",
-                )
-            )
-            .unionByName(
-                docs.filter(F.col("doc_id") % _MIDX_MOD == PROBE_REM).select(
-                    (F.col("doc_id") + F.lit(BOIL_OFF)).alias("doc_id"),
-                    F.lit(BOILER).alias("text"),
-                )
-            )
-        )
-        cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
-        return minhash_index_probe(
-            spark, path, new, old, "text", "doc_id",
-            threshold=_MIDX_THR, **cfg,
-        )
-
-    def _ensure_capped_chain(spark, sf_dir) -> str:
-        """Idempotent build -> normal tick -> flood tick (flag + cap)
-        chain, shared by the replay lane and the quarantine-review
-        lane (two state machines fighting over one index would wipe
-        each other's progress)."""
-        from uts_spark.functions.dedup import (
-            index_state,
-            index_tick,
-            minhash_coll_ref_init,
-            minhash_index_write,
-            minhash_ingest_tick,
+    def _ensure_capped_chain(spark, sf_dir, suffix: str) -> str:
+        """Idempotent build -> organic tick -> flood tick (flag + cap)
+        chain on the snapshot band index at ``suffix``; the replay
+        lane and the quarantine-review lane share one chain (two state
+        machines fighting over one index would wipe each other's
+        progress)."""
+        from uts_spark.functions.vindex import (
+            minhash_vindex_build,
+            minhash_vindex_ingest_tick,
         )
         from uts_spark.queries.llm_ops import (
             _frame_fingerprint,
             minhash_index_path,
         )
 
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        base = docs.filter(
-            ~F.col("doc_id").__mod__(_MIDX_MOD).isin(
-                NORM_REM, BOIL_REM, PROBE_REM
-            )
-        )
-        b1 = docs.filter(F.col("doc_id") % _MIDX_MOD == NORM_REM)
-        boiler = docs.filter(F.col("doc_id") % _MIDX_MOD == BOIL_REM).select(
-            "doc_id", F.lit(BOILER).alias("text")
-        )
-        old = base.unionByName(b1).unionByName(boiler)
-
-        fp0, fp1 = _frame_fingerprint(base), _frame_fingerprint(old)
+        base, b1, boiler, old, _ = _skew_fixture(spark, sf_dir)
+        fp0 = _frame_fingerprint(base)
         cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
-        path = minhash_index_path(sf_dir, fp0, **cfg) + "_skew"
-
-        state = index_state(path)
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            minhash_index_write(
-                base, "text", "doc_id", path, fingerprint=fp0, **cfg
-            )
-            minhash_coll_ref_init(spark, path)
-            state = fp0
-        if state == fp0:
-
-            def _ingest():
-                scratch = tempfile.mkdtemp(prefix="uts_skew_ingest_")
-                try:
-                    src = os.path.join(scratch, "src")
-                    chk = os.path.join(scratch, "chk")
-                    # deterministic tick order (same device as the ANN
-                    # drift lane): the organic batch's file exists
-                    # before the stream starts, the flood batch lands
-                    # only after epoch 0 drains — the flag decision
-                    # depends on the index state at measurement time
-                    b1.coalesce(1).write.parquet(src)
-                    stream = (
-                        spark.readStream.schema("doc_id long, text string")
-                        .option("maxFilesPerTrigger", 1)
-                        .parquet(src)
-                    )
-                    q = (
-                        stream.writeStream.foreachBatch(
-                            lambda bdf, bid: minhash_ingest_tick(
-                                spark, bdf, "text", "doc_id", path, bid,
-                                cap=CAP, **cfg,
-                            )
-                        )
-                        .option("checkpointLocation", chk)
-                        .start()
-                    )
-                    try:
-                        q.processAllAvailable()
-                        boiler.coalesce(1).write.mode("append").parquet(src)
-                        q.processAllAvailable()
-                    finally:
-                        q.stop()
-                finally:
-                    shutil.rmtree(scratch, ignore_errors=True)
-
-            index_tick(path, fp1, _ingest, **cfg)
+        path = minhash_index_path(sf_dir, fp0, **cfg) + suffix
+        _stream_fold(
+            spark, path, fp0, _frame_fingerprint(old),
+            lambda f: minhash_vindex_build(
+                base, "text", "doc_id", path, fingerprint=f, **cfg
+            ),
+            [b1.coalesce(1), boiler.coalesce(1)],
+            "doc_id long, text string",
+            lambda bdf, bid, f, run: minhash_vindex_ingest_tick(
+                spark, bdf, "text", "doc_id", path, bid,
+                fingerprint=f, stream_id=run, cap=CAP, **cfg,
+            ),
+        )
         return path
+
+    def _skew_capped_probe(spark, sf_dir, suffix: str):
+        from uts_spark.functions.vindex import minhash_vindex_probe
+
+        path = _ensure_capped_chain(spark, sf_dir, suffix)
+        _, _, _, old, new = _skew_fixture(spark, sf_dir)
+        return minhash_vindex_probe(
+            spark, path, new, old, "text", "doc_id",
+            threshold=_MIDX_THR, n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS,
+        )
 
     # quarantine REVIEW (round-10 candidate #3): a capped hot bucket IS
     # one duplicate cluster — surface the quarantine as clusters with a
@@ -2422,20 +2169,21 @@ def _register_stream_dedup_skew_cap():
         the auditable artifact is (doc, cluster representative, how
         many of its band rows were quarantined) — the shape a human or
         a downstream keep-one-per-cluster pass consumes, instead of
-        opaque parquet under _quarantine. The representative is the
-        1-hop min id over shared hot buckets (for a template flood,
-        1-hop IS the whole cluster — every member shares every
-        bucket). n_hot_rows = bands for a full-flood member: all 8 of
+        the opaque parquet dir the manifest's ``quarantine_dir``
+        names. The representative is the 1-hop min id over shared
+        hot buckets (for a template flood, 1-hop IS the whole cluster
+        — every member shares every bucket). n_hot_rows = bands for a full-flood member: all 8 of
         its band rows were capped. Oracle recomputes quarantine
         membership from the cap rule (bucket size > cap over the
         index membership at cap time) — so a cap verb that moved the
         wrong rows, or a review that read the wrong census, is an
         exact mismatch. Runs on the SAME chain as the replay lane
         (shared idempotent state machine)."""
-        path = _ensure_capped_chain(spark, sf_dir)
-        q = _read_pq(spark, os.path.join(path, "_quarantine")).select(
-            "id", "band", "bucket"
-        )
+        from uts_spark.sources.versioned import list_versions
+
+        path = _ensure_capped_chain(spark, sf_dir, "_skew")
+        qdir = list_versions(path)[-1]["quarantine_dir"]
+        q = _read_pq(spark, qdir).select("id", "band", "bucket")
         pairs = q.alias("a").join(q.alias("b"), ["band", "bucket"]).select(
             F.col("a.id").alias("doc_id"), F.col("b.id").alias("nb")
         )
@@ -2452,105 +2200,13 @@ def _register_stream_dedup_skew_cap():
         _OR["stream_dedup_ingest_skew_cap_replay"],
     )
     def stream_dedup_vindex_skew_cap_replay(spark, sf_dir):
-        """The skew control loop on the SNAPSHOT dedup index — monitor
-        state entirely on manifests (vindex.minhash_vindex_ingest_tick:
-        build commits coll_ref, each tick's collision ints commit WITH
-        its data, the cap is a CAS rewrite whose quarantine dir rides
-        the manifest as an aux dir), stream-id-keyed exactly-once (a
-        tick replayed after its own cap rewrite skips), a manifest-only
-        SEAL marks completion. Same derived flood corpus, thresholds,
-        and probe as the marker-family lane — the two protocols are
-        semantics-identical, so the oracle is reused verbatim (the cap
-        rule recomputed in SQL gates BOTH storage protocols)."""
-        from uts_spark.functions.vindex import (
-            minhash_vindex_build,
-            minhash_vindex_ingest_tick,
-            minhash_vindex_probe,
-            vindex_config,
-            vindex_seal,
-        )
-        from uts_spark.queries.llm_ops import (
-            _frame_fingerprint,
-            minhash_index_path,
-        )
-
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        base = docs.filter(
-            ~F.col("doc_id").__mod__(_MIDX_MOD).isin(
-                NORM_REM, BOIL_REM, PROBE_REM
-            )
-        )
-        b1 = docs.filter(F.col("doc_id") % _MIDX_MOD == NORM_REM)
-        boiler = docs.filter(F.col("doc_id") % _MIDX_MOD == BOIL_REM).select(
-            "doc_id", F.lit(BOILER).alias("text")
-        )
-        old = base.unionByName(b1).unionByName(boiler)
-        new = (
-            docs.filter(F.col("doc_id") % _MIDX_MOD == PROBE_REM)
-            .unionByName(
-                docs.filter(F.col("doc_id") % CLONE_MOD == 0).select(
-                    (F.col("doc_id") + F.lit(CLONE_OFF)).alias("doc_id"),
-                    "text",
-                )
-            )
-            .unionByName(
-                docs.filter(F.col("doc_id") % _MIDX_MOD == PROBE_REM).select(
-                    (F.col("doc_id") + F.lit(BOIL_OFF)).alias("doc_id"),
-                    F.lit(BOILER).alias("text"),
-                )
-            )
-        )
-
-        fp0, fp1 = _frame_fingerprint(base), _frame_fingerprint(old)
-        fp_ing = fp0 + ":ingesting"
-        cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
-        path = minhash_index_path(sf_dir, fp0, **cfg) + "_snapskew"
-
-        m = vindex_config(path)
-        state = m["fingerprint"] if m else None
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            minhash_vindex_build(
-                base, "text", "doc_id", path, fingerprint=fp0, **cfg
-            )
-            state = fp0
-        if state == fp0:
-            scratch = tempfile.mkdtemp(prefix="uts_vskew_ingest_")
-            try:
-                src = os.path.join(scratch, "src")
-                chk = os.path.join(scratch, "chk")
-                b1.coalesce(1).write.parquet(src)
-                stream = (
-                    spark.readStream.schema("doc_id long, text string")
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(src)
-                )
-                run_id = uuid.uuid4().hex[:8]
-                q = (
-                    stream.writeStream.foreachBatch(
-                        lambda bdf, bid: minhash_vindex_ingest_tick(
-                            spark, bdf, "text", "doc_id", path, bid,
-                            fingerprint=fp_ing, stream_id=run_id, **cfg,
-                        )
-                    )
-                    .option("checkpointLocation", chk)
-                    .start()
-                )
-                try:
-                    q.processAllAvailable()
-                    boiler.coalesce(1).write.mode("append").parquet(src)
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-            finally:
-                shutil.rmtree(scratch, ignore_errors=True)
-            vindex_seal(path, fp1)
-
-        return minhash_vindex_probe(
-            spark, path, new, old, "text", "doc_id",
-            threshold=_MIDX_THR, **cfg,
-        )
+        """The skew control loop on its own index path — a second,
+        independent service instance of the same chain (build commits
+        coll_ref, each tick's collision ints commit WITH its data, the
+        cap is a CAS rewrite whose quarantine dir rides the manifest,
+        a manifest-only SEAL marks completion), gated by the same
+        oracle."""
+        return _skew_capped_probe(spark, sf_dir, "_snapskew")
 
     return (
         stream_dedup_ingest_skew_cap_replay,
@@ -2566,10 +2222,58 @@ def _register_stream_dedup_skew_cap():
 ) = _register_stream_dedup_skew_cap()
 
 
+def _ann_vindex_ingest(spark, sf_dir, suffix: str):
+    """The vector ingest loop on the snapshot IVF index, shared by the
+    ingest replay lanes (each on its own ``suffix`` path): build over
+    the base vectors (centroids frozen as a manifest sidecar), then
+    the rem-7 batch arrives as 4 micro-batches and each folds in via
+    ivf_vindex_append(batch_id=bid) — exactly-once is STRUCTURAL: the
+    manifest PUT-if-absent is the atomic commit point and the batch
+    key rides on the committed manifest, so a replayed batch either
+    finds its key committed (skip — crash was post-commit) or
+    recommits (the torn attempt's delta dir is unreferenced garbage).
+    Probe at the sealed snapshot with the frozen sidecar centroids.
+    Final index rows are independent of micro-batch boundaries, so
+    the probe hash-matches the batch append lane's oracle. Scale:
+    every tick is batch-sized + an O(1) commit; object-storage-safe
+    end to end (VERDICT r8 #4's 100 TB motivation)."""
+    from uts_spark.functions.vindex import (
+        ivf_vindex_append,
+        ivf_vindex_build,
+        ivf_vindex_probe,
+    )
+    from uts_spark.queries.llm_ops import (
+        _IVF_APP_MOD,
+        _IVF_APP_REM,
+        _emb_frame_fingerprint,
+        ivf_index_path,
+    )
+
+    e = table(spark, sf_dir, "embeddings")
+    base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
+    batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
+    fp0 = _emb_frame_fingerprint(base)
+    path = ivf_index_path(sf_dir, fp0, n_cells=8) + suffix
+    _stream_fold(
+        spark, path, fp0, _emb_frame_fingerprint(e),
+        lambda f: ivf_vindex_build(base, path, fingerprint=f, n_cells=8),
+        [batch.select("vec_id", "embedding").repartition(4)],
+        # array<float> — the embeddings table's element type; a double
+        # schema here writes DOUBLE deltas into a FLOAT index and
+        # poisons the merged scan
+        "vec_id long, embedding array<float>",
+        lambda bdf, bid, f, run: ivf_vindex_append(
+            bdf, path, fingerprint=f, batch_id=bid, stream_id=run,
+        ),
+    )
+    anchors = e.filter(F.col("vec_id") < 5)
+    return ivf_vindex_probe(spark, path, anchors, k=10, n_probe=3)
+
+
 def _register_stream_ann_vindex_ingest():
-    # the post-ingest snapshot index covers exactly what the marker
-    # family's append lane does (centroids frozen from base, membership
-    # = full corpus), so its oracle is reused verbatim
+    # the post-ingest snapshot index covers exactly what the append
+    # lane's does (centroids frozen from base, membership = full
+    # corpus), so its oracle is reused verbatim
     from uts_spark.registry import ORACLES
 
     @query(
@@ -2577,97 +2281,10 @@ def _register_stream_ann_vindex_ingest():
         ORACLES["similarity_ann_ivf_append_probe"],
     )
     def stream_ann_vindex_ingest_replay(spark, sf_dir):
-        """The vector ingest loop on the SNAPSHOT-COMMITTED index — no
-        pending marker, no staged/sweep kernel, no O_EXCL anywhere:
-        each micro-batch folds in via ivf_vindex_append(batch_id=bid),
-        whose exactly-once guarantee is STRUCTURAL — the manifest
-        PUT-if-absent is the atomic commit point and the batch key
-        e{epoch}b{bid} rides on the committed manifest, so a replayed
-        batch either finds its key committed (skip — crash was
-        post-commit) or recommits (the torn attempt's delta dir is
-        unreferenced garbage). After the stream drains, a MANIFEST-ONLY
-        seal commit advances the fingerprint — a run crashed
-        mid-stream leaves the ingest fingerprint and the next
-        invocation rebuilds instead of serving a half-folded index
-        (the snapshot protocol's answer to the marker family's
-        pending-marker tick). Probe at the final snapshot with the
-        frozen sidecar centroids; oracle = the marker append lane's
-        recompute, because the two storage protocols are
-        semantics-identical by construction. Scale: every tick is
-        batch-sized + an O(1) commit; object-storage-safe end to end
-        (VERDICT r8 #4's 100 TB motivation)."""
-        from uts_spark.functions.vindex import (
-            ivf_vindex_append,
-            ivf_vindex_build,
-            ivf_vindex_probe,
-            vindex_config,
-            vindex_seal,
-        )
-        from uts_spark.queries.llm_ops import (
-            _IVF_APP_MOD,
-            _IVF_APP_REM,
-            _emb_frame_fingerprint,
-            ivf_index_path,
-        )
-
-        e = table(spark, sf_dir, "embeddings")
-        base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
-        batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-        fp0 = _emb_frame_fingerprint(base)
-        fp1 = _emb_frame_fingerprint(e)
-        fp_ing = fp0 + ":ingesting"
-        path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_snapstream"
-
-        m = vindex_config(path)
-        state = m["fingerprint"] if m else None
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            ivf_vindex_build(base, path, fingerprint=fp0, n_cells=8)
-            state = fp0
-        if state == fp0:
-            scratch = tempfile.mkdtemp(prefix="uts_vidx_ingest_")
-            try:
-                src = os.path.join(scratch, "src")
-                chk = os.path.join(scratch, "chk")
-                batch.select("vec_id", "embedding").repartition(
-                    4
-                ).write.parquet(src)
-                stream = (
-                    # array<float> — the embeddings table's element
-                    # type; a double schema here writes DOUBLE deltas
-                    # into a FLOAT index and poisons the merged scan
-                    spark.readStream.schema(
-                        "vec_id long, embedding array<float>"
-                    )
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(src)
-                )
-                # per-run stream id: replays WITHIN this run dedup by
-                # s{id}b{bid} even across a rewrite; a fresh run gets
-                # a fresh id (no aliasing) and a torn run's state is
-                # rebuilt by the fingerprint check anyway
-                run_id = uuid.uuid4().hex[:8]
-                q = (
-                    stream.writeStream.foreachBatch(
-                        lambda bdf, bid: ivf_vindex_append(
-                            bdf, path, fingerprint=fp_ing, batch_id=bid,
-                            stream_id=run_id,
-                        )
-                    )
-                    .option("checkpointLocation", chk)
-                    .start()
-                )
-                try:
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-            finally:
-                shutil.rmtree(scratch, ignore_errors=True)
-            vindex_seal(path, fp1)
-
-        anchors = e.filter(F.col("vec_id") < 5)
-        return ivf_vindex_probe(spark, path, anchors, k=10, n_probe=3)
+        """The vector ingest loop (:func:`_ann_vindex_ingest`) on its
+        own index path — a second, independent service instance of
+        the same loop, gated by the same oracle."""
+        return _ann_vindex_ingest(spark, sf_dir, "_snapstream")
 
     return stream_ann_vindex_ingest_replay
 
@@ -2675,9 +2292,110 @@ def _register_stream_ann_vindex_ingest():
 stream_ann_vindex_ingest_replay = _register_stream_ann_vindex_ingest()
 
 
+def _drift_fixture(spark, sf_dir):
+    """(base, b1, b2, corpus, centers) of the DERIVED clustered drift
+    corpus (see _register_stream_ann_drift_recluster): vector = 8.0 at
+    its cluster's component + dyadic 1/16-grid jitter, exact at every
+    SF. b1 joins the base clusters; b2 clusters on components 56..63,
+    orthogonal to every frozen centroid. ``centers`` are the 8 PURE
+    cluster centers the build freezes its quantizer from (an 8-row
+    frame — _ivf_centroids takes all of it), so the manifest's fit_ref
+    is the clustered regime's ~0.92, not a hash-sample's
+    cluster-coverage lottery."""
+    from uts_spark.queries.llm_ops import _DRIFT_ID0, _IVF_APP_MOD, _IVF_APP_REM
+
+    def dvec(id_col, center_col):
+        # mirrors _dvec_sql verbatim
+        return F.transform(
+            F.sequence(F.lit(0), F.lit(63)),
+            lambda j: (
+                ((id_col * 31 + j * 7) % 16 - 8).cast("double")
+                / F.lit(16.0)
+            )
+            + F.when(j == center_col, F.lit(8.0)).otherwise(F.lit(0.0)),
+        )
+
+    e = table(spark, sf_dir, "embeddings")
+    base = e.filter(
+        F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
+    ).select(
+        "vec_id",
+        dvec(F.col("vec_id"), F.col("vec_id") % 8).alias("embedding"),
+    )
+    moved = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
+    rid = (F.col("vec_id") + F.lit(_DRIFT_ID0))
+    b1 = moved.filter(F.col("vec_id") % 20 == 7).select(
+        rid.alias("vec_id"),
+        dvec(rid, rid % 8).alias("embedding"),
+    )
+    b2 = moved.filter(F.col("vec_id") % 20 == 17).select(
+        rid.alias("vec_id"),
+        dvec(rid, F.lit(56) + rid % 8).alias("embedding"),
+    )
+    centers = spark.range(8).select(
+        (F.col("id") + F.lit(9000)).alias("vec_id"),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(63)),
+            lambda j: F.when(
+                j == F.col("id").cast("int"), F.lit(8.0)
+            ).otherwise(F.lit(0.0)),
+        ).alias("embedding"),
+    )
+    return base, b1, b2, base.unionAll(b1).unionAll(b2), centers
+
+
+def _drift_anchors(corpus):
+    from uts_spark.queries.llm_ops import _DRIFT_ANCHOR_IDS
+
+    return corpus.filter(
+        (F.col("vec_id") < 3)
+        | F.col("vec_id").isin(list(_DRIFT_ANCHOR_IDS))
+    )
+
+
+def _ann_vindex_drift(spark, sf_dir, suffix: str):
+    """The CLOSED drift loop on the snapshot IVF index, shared by the
+    drift replay lanes (each on its own ``suffix`` path): the build
+    manifest carries ``fit_ref`` (exact corpus-fit ints against the
+    frozen sidecar centroids), every ingest tick commits its batch's
+    fit ints ATOMICALLY WITH its data (one manifest = data + stat +
+    exactly-once batch key), and a flagged tick's recluster is an
+    ordinary rewrite commit that resets ``fit_ref`` — history intact,
+    pre-recluster pins still resolve their own quantizer. Micro-batch
+    1 joins the base clusters (fit ratio ~1.0, no flag); micro-batch
+    2 clusters on orthogonal components (~0.07, flags at the measured
+    0.82). The final index therefore equals a FRESH build over the
+    full drifted corpus."""
+    from uts_spark.functions.vindex import (
+        ivf_vindex_build,
+        ivf_vindex_ingest_tick,
+        ivf_vindex_probe,
+    )
+    from uts_spark.queries.llm_ops import _emb_frame_fingerprint, ivf_index_path
+
+    base, b1, b2, corpus, centers = _drift_fixture(spark, sf_dir)
+    fp0 = _emb_frame_fingerprint(base)
+    path = ivf_index_path(sf_dir, fp0, n_cells=8) + suffix
+    _stream_fold(
+        spark, path, fp0, _emb_frame_fingerprint(corpus),
+        lambda f: ivf_vindex_build(
+            base, path, fingerprint=f, n_cells=8, centroid_src=centers,
+        ),
+        [b1.coalesce(1), b2.coalesce(1)],
+        "vec_id long, embedding array<double>",
+        # stream-id-keyed exactly-once: a tick replayed after its own
+        # recluster must SKIP (epoch keys would re-append the
+        # already-folded batch; see vindex._batch_key)
+        lambda bdf, bid, f, run: ivf_vindex_ingest_tick(
+            spark, bdf, path, bid, fingerprint=f, stream_id=run,
+        ),
+    )
+    return ivf_vindex_probe(spark, path, _drift_anchors(corpus), k=10, n_probe=3)
+
+
 def _register_stream_ann_vindex_drift():
     # the final snapshot index equals a fresh rebuild over the full
-    # drifted corpus — exactly the marker drift lane's oracle
+    # drifted corpus — exactly the drift replay lane's oracle
     from uts_spark.registry import ORACLES
 
     @query(
@@ -2685,136 +2403,10 @@ def _register_stream_ann_vindex_drift():
         ORACLES["stream_ann_ingest_drift_recluster_replay"],
     )
     def stream_ann_vindex_drift_recluster_replay(spark, sf_dir):
-        """The CLOSED drift loop on the SNAPSHOT index — the entire
-        monitor state lives ON the manifests (no _FIT_REF.json, no
-        history sidecar, no pending marker): the build manifest
-        carries ``fit_ref`` (exact corpus-fit ints against the frozen
-        sidecar centroids), every ingest tick commits its batch's fit
-        ints ATOMICALLY WITH its data (one manifest = data + stat +
-        exactly-once batch key), and the flagged tick's recluster is
-        an ordinary rewrite commit that resets ``fit_ref`` — history
-        intact, pre-recluster pins still resolve their own quantizer.
-        Same derived clustered corpus and thresholds as the marker
-        lane (micro-batch 1 joins the base clusters, fit ratio ~1.0,
-        no flag; micro-batch 2 clusters on orthogonal components,
-        ~0.07, flags at the measured 0.82): the two protocols are
-        semantics-identical, so the oracle is reused verbatim. A
-        crashed run leaves the ingest fingerprint (never fp1 — the
-        SEAL is the last commit) and the next invocation rebuilds."""
-        from uts_spark.functions.vindex import (
-            ivf_vindex_build,
-            ivf_vindex_ingest_tick,
-            ivf_vindex_probe,
-            vindex_config,
-            vindex_seal,
-        )
-        from uts_spark.queries.llm_ops import (
-            _DRIFT_ANCHOR_IDS,
-            _DRIFT_ID0,
-            _IVF_APP_MOD,
-            _IVF_APP_REM,
-            _emb_frame_fingerprint,
-            ivf_index_path,
-        )
-
-        def dvec(id_col, center_col):
-            return F.transform(
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda j: (
-                    ((id_col * 31 + j * 7) % 16 - 8).cast("double")
-                    / F.lit(16.0)
-                )
-                + F.when(j == center_col, F.lit(8.0)).otherwise(F.lit(0.0)),
-            )
-
-        e = table(spark, sf_dir, "embeddings")
-        base = e.filter(
-            F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
-        ).select(
-            "vec_id",
-            dvec(F.col("vec_id"), F.col("vec_id") % 8).alias("embedding"),
-        )
-        moved = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-        rid = (F.col("vec_id") + F.lit(_DRIFT_ID0))
-        b1 = moved.filter(F.col("vec_id") % 20 == 7).select(
-            rid.alias("vec_id"),
-            dvec(rid, rid % 8).alias("embedding"),
-        )
-        b2 = moved.filter(F.col("vec_id") % 20 == 17).select(
-            rid.alias("vec_id"),
-            dvec(rid, F.lit(56) + rid % 8).alias("embedding"),
-        )
-        corpus = base.unionAll(b1).unionAll(b2)
-
-        fp0 = _emb_frame_fingerprint(base)
-        fp1 = _emb_frame_fingerprint(corpus)
-        fp_ing = fp0 + ":ingesting"
-        path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_snapdrift"
-
-        m = vindex_config(path)
-        state = m["fingerprint"] if m else None
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            # freeze the quantizer from the 8 PURE cluster centers
-            # (same fixture-honesty device as the marker lane): the
-            # manifest's fit_ref is then the clustered regime's fit
-            centers = spark.range(8).select(
-                (F.col("id") + F.lit(9000)).alias("vec_id"),
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(63)),
-                    lambda j: F.when(
-                        j == F.col("id").cast("int"), F.lit(8.0)
-                    ).otherwise(F.lit(0.0)),
-                ).alias("embedding"),
-            )
-            ivf_vindex_build(
-                base, path, fingerprint=fp0, n_cells=8,
-                centroid_src=centers,
-            )
-            state = fp0
-        if state == fp0:
-            scratch = tempfile.mkdtemp(prefix="uts_vdrift_ingest_")
-            try:
-                src = os.path.join(scratch, "src")
-                chk = os.path.join(scratch, "chk")
-                schema = "vec_id long, embedding array<double>"
-                b1.coalesce(1).write.parquet(src)
-                stream = (
-                    spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(src)
-                )
-                # stream-id-keyed exactly-once: a tick replayed after
-                # its own recluster must SKIP (epoch keys would
-                # re-append the already-folded batch — the seam the
-                # snapshot protocol closes; see _batch_key)
-                run_id = uuid.uuid4().hex[:8]
-                q = (
-                    stream.writeStream.foreachBatch(
-                        lambda bdf, bid: ivf_vindex_ingest_tick(
-                            spark, bdf, path, bid, fingerprint=fp_ing,
-                            stream_id=run_id,
-                        )
-                    )
-                    .option("checkpointLocation", chk)
-                    .start()
-                )
-                try:
-                    q.processAllAvailable()
-                    b2.coalesce(1).write.mode("append").parquet(src)
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-            finally:
-                shutil.rmtree(scratch, ignore_errors=True)
-            vindex_seal(path, fp1)
-
-        anchors = corpus.filter(
-            (F.col("vec_id") < 3)
-            | F.col("vec_id").isin(list(_DRIFT_ANCHOR_IDS))
-        )
-        return ivf_vindex_probe(spark, path, anchors, k=10, n_probe=3)
+        """The closed drift loop (:func:`_ann_vindex_drift`) on its own
+        index path — a second, independent service instance of the
+        same loop, gated by the same oracle."""
+        return _ann_vindex_drift(spark, sf_dir, "_snapdrift")
 
     return stream_ann_vindex_drift_recluster_replay
 
@@ -3467,7 +3059,6 @@ def _register_facade_tick_lanes():
             index_probe,
             index_service_tick,
         )
-        from uts_spark.functions.vindex import vindex_config, vindex_seal
         from uts_spark.queries.llm_ops import (
             _MIDX_BANDS,
             _MIDX_K,
@@ -3478,54 +3069,22 @@ def _register_facade_tick_lanes():
         )
 
         base, b1, boiler, old, new = _skew_fixture(spark, sf_dir)
-        fp0, fp1 = _frame_fingerprint(base), _frame_fingerprint(old)
-        fp_ing = fp0 + ":ingesting"
+        fp0 = _frame_fingerprint(base)
         cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
         path = minhash_index_path(sf_dir, fp0, **cfg) + "_facskew"
-
-        m = vindex_config(path)
-        state = m["fingerprint"] if m else None
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            index_build(
-                base, "minhash", path, fingerprint=fp0,
+        _stream_fold(
+            spark, path, fp0, _frame_fingerprint(old),
+            lambda f: index_build(
+                base, "minhash", path, fingerprint=f,
                 text_col="text", id_col="doc_id", **cfg,
-            )
-            state = fp0
-        if state == fp0:
-            scratch = tempfile.mkdtemp(prefix="uts_facskew_")
-            try:
-                src = os.path.join(scratch, "src")
-                chk = os.path.join(scratch, "chk")
-                b1.coalesce(1).write.parquet(src)
-                stream = (
-                    spark.readStream.schema("doc_id long, text string")
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(src)
-                )
-                run_id = uuid.uuid4().hex[:8]
-                q = (
-                    stream.writeStream.foreachBatch(
-                        lambda bdf, bid: index_service_tick(
-                            spark, bdf, path, bid, fingerprint=fp_ing,
-                            stream_id=run_id,
-                            text_col="text", id_col="doc_id",
-                        )
-                    )
-                    .option("checkpointLocation", chk)
-                    .start()
-                )
-                try:
-                    q.processAllAvailable()
-                    boiler.coalesce(1).write.mode("append").parquet(src)
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-            finally:
-                shutil.rmtree(scratch, ignore_errors=True)
-            vindex_seal(path, fp1)
-
+            ),
+            [b1.coalesce(1), boiler.coalesce(1)],
+            "doc_id long, text string",
+            lambda bdf, bid, f, run: index_service_tick(
+                spark, bdf, path, bid, fingerprint=f, stream_id=run,
+                text_col="text", id_col="doc_id",
+            ),
+        )
         return index_probe(
             spark, path, (new, old, "text", "doc_id"),
             threshold=_MIDX_THR,
@@ -3547,108 +3106,58 @@ def _register_facade_tick_lanes():
             index_probe,
             index_service_tick,
         )
-        from uts_spark.functions.vindex import vindex_config, vindex_seal
         from uts_spark.queries.llm_ops import (
-            _DRIFT_ANCHOR_IDS,
-            _DRIFT_ID0,
-            _IVF_APP_MOD,
-            _IVF_APP_REM,
             _emb_frame_fingerprint,
             ivf_index_path,
         )
 
-        def dvec(id_col, center_col):
-            return F.transform(
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda j: (
-                    ((id_col * 31 + j * 7) % 16 - 8).cast("double")
-                    / F.lit(16.0)
-                )
-                + F.when(j == center_col, F.lit(8.0)).otherwise(F.lit(0.0)),
-            )
+        base, b1, b2, corpus, centers = _drift_fixture(spark, sf_dir)
+        fp0 = _emb_frame_fingerprint(base)
+        path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_facdrift"
+        _stream_fold(
+            spark, path, fp0, _emb_frame_fingerprint(corpus),
+            lambda f: index_build(
+                base, "ivf", path, fingerprint=f, n_cells=8,
+                centroid_src=centers,
+            ),
+            [b1.coalesce(1), b2.coalesce(1)],
+            "vec_id long, embedding array<double>",
+            lambda bdf, bid, f, run: index_service_tick(
+                spark, bdf, path, bid, fingerprint=f, stream_id=run,
+            ),
+        )
+        return index_probe(
+            spark, path, _drift_anchors(corpus), k=10, n_probe=3
+        )
+
+    def _vector_ingest(spark, sf_dir, path_of, family, n_files, **cfg):
+        """Facade-routed ingest of the rem-7 batch into a ``family``
+        index over base; returns (index path, embeddings)."""
+        from uts_spark.functions.index_protocol import (
+            index_build,
+            index_service_tick,
+        )
+        from uts_spark.queries.llm_ops import (
+            _IVF_APP_MOD,
+            _IVF_APP_REM,
+            _emb_frame_fingerprint,
+        )
 
         e = table(spark, sf_dir, "embeddings")
-        base = e.filter(
-            F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
-        ).select(
-            "vec_id",
-            dvec(F.col("vec_id"), F.col("vec_id") % 8).alias("embedding"),
-        )
-        moved = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-        rid = (F.col("vec_id") + F.lit(_DRIFT_ID0))
-        b1 = moved.filter(F.col("vec_id") % 20 == 7).select(
-            rid.alias("vec_id"),
-            dvec(rid, rid % 8).alias("embedding"),
-        )
-        b2 = moved.filter(F.col("vec_id") % 20 == 17).select(
-            rid.alias("vec_id"),
-            dvec(rid, F.lit(56) + rid % 8).alias("embedding"),
-        )
-        corpus = base.unionAll(b1).unionAll(b2)
-
+        base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
+        batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
         fp0 = _emb_frame_fingerprint(base)
-        fp1 = _emb_frame_fingerprint(corpus)
-        fp_ing = fp0 + ":ingesting"
-        path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_facdrift"
-
-        m = vindex_config(path)
-        state = m["fingerprint"] if m else None
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            centers = spark.range(8).select(
-                (F.col("id") + F.lit(9000)).alias("vec_id"),
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(63)),
-                    lambda j: F.when(
-                        j == F.col("id").cast("int"), F.lit(8.0)
-                    ).otherwise(F.lit(0.0)),
-                ).alias("embedding"),
-            )
-            index_build(
-                base, "ivf", path, fingerprint=fp0, n_cells=8,
-                centroid_src=centers,
-            )
-            state = fp0
-        if state == fp0:
-            scratch = tempfile.mkdtemp(prefix="uts_facdrift_")
-            try:
-                src = os.path.join(scratch, "src")
-                chk = os.path.join(scratch, "chk")
-                b1.coalesce(1).write.parquet(src)
-                stream = (
-                    spark.readStream.schema(
-                        "vec_id long, embedding array<double>"
-                    )
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(src)
-                )
-                run_id = uuid.uuid4().hex[:8]
-                q = (
-                    stream.writeStream.foreachBatch(
-                        lambda bdf, bid: index_service_tick(
-                            spark, bdf, path, bid, fingerprint=fp_ing,
-                            stream_id=run_id,
-                        )
-                    )
-                    .option("checkpointLocation", chk)
-                    .start()
-                )
-                try:
-                    q.processAllAvailable()
-                    b2.coalesce(1).write.mode("append").parquet(src)
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-            finally:
-                shutil.rmtree(scratch, ignore_errors=True)
-            vindex_seal(path, fp1)
-
-        anchors = corpus.filter(
-            (F.col("vec_id") < 3)
-            | F.col("vec_id").isin(list(_DRIFT_ANCHOR_IDS))
+        path = path_of(fp0)
+        _stream_fold(
+            spark, path, fp0, _emb_frame_fingerprint(e),
+            lambda f: index_build(base, family, path, fingerprint=f, **cfg),
+            [batch.select("vec_id", "embedding").repartition(n_files)],
+            "vec_id long, embedding array<float>",
+            lambda bdf, bid, f, run: index_service_tick(
+                spark, bdf, path, bid, fingerprint=f, stream_id=run,
+            ),
         )
-        return index_probe(spark, path, anchors, k=10, n_probe=3)
+        return path, e
 
     @query(
         "facade_tick_lsh_ingest_replay",
@@ -3660,76 +3169,21 @@ def _register_facade_tick_lanes():
         append (hyperplanes are seed-derived — no quantizer to drift,
         no monitor to run; the tick's dict says so honestly). After
         the stream drains the index covers the full corpus, so the
-        marker append lane's recompute oracle is reused verbatim."""
-        from uts_spark.functions.index_protocol import (
-            index_build,
-            index_probe,
-            index_service_tick,
-        )
-        from uts_spark.functions.vindex import vindex_config, vindex_seal
+        append lane's recompute oracle is reused verbatim."""
+        from uts_spark.functions.index_protocol import index_probe
         from uts_spark.queries.llm_ops import (
             _ANN_IDX_PLANES,
             _ANN_IDX_TABLES,
-            _IVF_APP_MOD,
-            _IVF_APP_REM,
             EMB_DIM,
-            _emb_frame_fingerprint,
             ann_index_path,
         )
 
-        e = table(spark, sf_dir, "embeddings")
-        base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
-        batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-        fp0, fp1 = _emb_frame_fingerprint(base), _emb_frame_fingerprint(e)
-        fp_ing = fp0 + ":ingesting"
-        path = ann_index_path(sf_dir, fp0) + "_factick"
-
-        m = vindex_config(path)
-        state = m["fingerprint"] if m else None
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            index_build(
-                base, "lsh", path, fingerprint=fp0, dim=EMB_DIM,
-                planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES,
-            )
-            state = fp0
-        if state == fp0:
-            scratch = tempfile.mkdtemp(prefix="uts_faclsh_")
-            try:
-                src = os.path.join(scratch, "src")
-                chk = os.path.join(scratch, "chk")
-                batch.select("vec_id", "embedding").repartition(
-                    4
-                ).write.parquet(src)
-                stream = (
-                    spark.readStream.schema(
-                        "vec_id long, embedding array<float>"
-                    )
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(src)
-                )
-                run_id = uuid.uuid4().hex[:8]
-                q = (
-                    stream.writeStream.foreachBatch(
-                        lambda bdf, bid: index_service_tick(
-                            spark, bdf, path, bid, fingerprint=fp_ing,
-                            stream_id=run_id,
-                        )
-                    )
-                    .option("checkpointLocation", chk)
-                    .start()
-                )
-                try:
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-            finally:
-                shutil.rmtree(scratch, ignore_errors=True)
-            vindex_seal(path, fp1)
-
-        anchors = e.filter(F.col("vec_id") < 5)
-        return index_probe(spark, path, anchors, k=10)
+        path, e = _vector_ingest(
+            spark, sf_dir, lambda fp: ann_index_path(sf_dir, fp) + "_factick",
+            "lsh", 4, dim=EMB_DIM,
+            planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES,
+        )
+        return index_probe(spark, path, e.filter(F.col("vec_id") < 5), k=10)
 
     @query(
         "facade_tick_ivfpq_ingest_replay",
@@ -3742,82 +3196,24 @@ def _register_facade_tick_lanes():
         committed WITH the data, flag at the measured 1.3x). The
         organic rem-7 batch sits at ~1.0x, so the monitor runs and
         honestly does NOT fire — the final index equals
-        build-then-append, and the marker append lane's composed
+        build-then-append, and the append lane's composed
         recompute oracle is reused verbatim."""
-        from uts_spark.functions.index_protocol import (
-            index_build,
-            index_probe,
-            index_service_tick,
-        )
-        from uts_spark.functions.vindex import vindex_config, vindex_seal
+        from uts_spark.functions.index_protocol import index_probe
         from uts_spark.queries.llm_ops import (
-            _IVF_APP_MOD,
-            _IVF_APP_REM,
             _PQ_C,
             _PQ_M,
             EMB_DIM,
-            _emb_frame_fingerprint,
-            _warehouse_dir,
+            ivfpq_index_path,
         )
 
-        e = table(spark, sf_dir, "embeddings")
-        base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
-        batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-        fp0, fp1 = _emb_frame_fingerprint(base), _emb_frame_fingerprint(e)
-        fp_ing = fp0 + ":ingesting"
-        tag = os.path.basename(sf_dir.rstrip("/")) or "default"
-        path = os.path.join(
-            _warehouse_dir(),
-            f"ann_ivfpq_index_{tag}_{fp0}_c8m{_PQ_M}k{_PQ_C}_factick",
+        path, e = _vector_ingest(
+            spark, sf_dir,
+            lambda fp: ivfpq_index_path(sf_dir, fp) + "_factick",
+            "ivfpq", 2, dim=EMB_DIM, n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C,
         )
-
-        m = vindex_config(path)
-        state = m["fingerprint"] if m else None
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            index_build(
-                base, "ivfpq", path, fingerprint=fp0, dim=EMB_DIM,
-                n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C,
-            )
-            state = fp0
-        if state == fp0:
-            scratch = tempfile.mkdtemp(prefix="uts_facpq_")
-            try:
-                src = os.path.join(scratch, "src")
-                chk = os.path.join(scratch, "chk")
-                batch.select("vec_id", "embedding").repartition(
-                    2
-                ).write.parquet(src)
-                stream = (
-                    spark.readStream.schema(
-                        "vec_id long, embedding array<float>"
-                    )
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(src)
-                )
-                run_id = uuid.uuid4().hex[:8]
-                q = (
-                    stream.writeStream.foreachBatch(
-                        lambda bdf, bid: index_service_tick(
-                            spark, bdf, path, bid, fingerprint=fp_ing,
-                            stream_id=run_id,
-                        )
-                    )
-                    .option("checkpointLocation", chk)
-                    .start()
-                )
-                try:
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-            finally:
-                shutil.rmtree(scratch, ignore_errors=True)
-            vindex_seal(path, fp1)
-
-        anchors = e.filter(F.col("vec_id") < 5)
         return index_probe(
-            spark, path, anchors, k=10, n_probe=3, rerank=40
+            spark, path, e.filter(F.col("vec_id") < 5),
+            k=10, n_probe=3, rerank=40,
         )
 
     return (

@@ -165,20 +165,20 @@ _REGISTRY_FLOOR = 417  # round 11: +streaming-maintained view replay
 # Earlier round 10: +4 facade-routed service-tick replay
 # lanes (index_service_tick through the protocol facade for all four
 # families, family lanes' oracles reused verbatim) and +1 one-call GDPR
-# lane (index_gdpr_erase_everywhere — mixed snapshot+marker+table
-# targets behind a closed-form accounting oracle, pruned self-audit),
+# lane (index_gdpr_erase_everywhere — three index families + a table
+# target behind a closed-form accounting oracle, pruned self-audit),
 # +1 WAP lane (versioned_wap_branch_publish — writable branches),
 # +1 catalog lane (catalog_name_resolution — name->path shim),
 # +1 column-level streaming CDC lane (stream_cdc_apply_columns_replay),
-# +1 marker-index history CDF lane (dedup_minhash_index_cdf).
+# +1 band-index change-feed lane (dedup_minhash_index_cdf).
 # Round 9c floor was 376: +1 protocol-facade lifecycle lane,
 # +2 Arabic-family confidence/per-member-sweep lanes, +2 versioned-table
 # change-data-feed lanes (dir-diff fast path + key-diff across rewrites),
 # +1 schema-evolution read lane, +1 CDC incremental-apply convergence lane,
 # +1 streaming CDC consumer (committed-cursor apply loop), +1 pruned-erasure
 # read lane over an id-clustered append chain
-# (similarity_ann_protocol_facade_probe — the measured marker->snapshot
-# default flip, functions/index_protocol.py).
+# (similarity_ann_protocol_facade_probe — the index facade,
+# functions/index_protocol.py).
 # Round 9b floor was 367: +5 snapshot-ANN lanes (LSH/IVF/IVF-PQ
 # vindex lifecycles, recluster, pin-across-recluster), the dedup
 # ingest skew-cap replay, and the v3 router pair (ar/ko/th in-set +

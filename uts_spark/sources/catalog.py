@@ -168,22 +168,13 @@ def set_retention(
     if (keep_last is not None or max_age_secs is not None) and cur[
         "kind"
     ] == "index":
-        # the janitor can only vacuum manifest-chain (snapshot-
-        # protocol) entries; accepting a policy on a marker-protocol
-        # index would record a compliance window that nothing ever
-        # enforces (ADVICE r10, low) — refuse loudly at set time
-        from uts_spark.functions.index_protocol import (
-            _detect_index_protocol,
-        )
+        # the janitor can only vacuum manifest chains; a policy on a
+        # path without one would record a compliance window that
+        # nothing ever enforces (ADVICE r10, low) — refuse loudly at
+        # set time (the facade's resolver raises, naming vindex_migrate)
+        from uts_spark.functions.index_protocol import _family_config
 
-        if _detect_index_protocol(cur["path"]) != "snapshot":
-            raise ValueError(
-                f"set_retention: entry {name!r} is a marker-protocol "
-                "index — its history is a JSONL census, not a "
-                "manifest chain, so the janitor cannot vacuum it; "
-                "migrate to the snapshot protocol (vindex_migrate) "
-                "before attaching a retention policy"
-            )
+        _family_config(cur["path"])
     g = cur["generation"] + 1
     rec = {"name": name, "path": cur["path"], "kind": cur["kind"]}
     policy: dict = {}
@@ -436,22 +427,17 @@ def index_probe_by_name(
     version: int | None = None,
     **kwargs,
 ) -> DataFrame:
-    """Probe a registered index by name through the protocol facade
+    """Probe a registered index by name through the index facade
     (family and config resolve from the index's own manifest)."""
     rec = resolve(catalog, name)
     if rec["kind"] != "index":
         raise ValueError(
             f"catalog entry {name!r} is a {rec['kind']}, not an index"
         )
-    from uts_spark.functions.index_protocol import (
-        _detect_index_protocol,
-        index_probe,
-    )
+    from uts_spark.functions.index_protocol import index_probe
 
-    proto = _detect_index_protocol(rec["path"])
     return index_probe(
-        spark, rec["path"], probe_input, protocol=proto,
-        version=version, **kwargs,
+        spark, rec["path"], probe_input, version=version, **kwargs
     )
 
 
@@ -819,9 +805,6 @@ def erase_by_names(
     catalog: str,
     names: list[str] | None = None,
     fingerprint: str = "",
-    deleted_rows=None,
-    text_col: str = "text",
-    vec_col: str = "embedding",
     table_keys: dict[str, str] | None = None,
     table_mode: str = "cow",
     index_mode: str = "cow",
@@ -829,7 +812,7 @@ def erase_by_names(
     """CATALOG-WIDE GDPR: one call erases a takedown batch from every
     named target (default: the WHOLE catalog) — tables and indexes
     dispatch by their registered kind, indexes by their manifest's
-    protocol/family, through :func:`index_protocol.erase_everywhere`
+    family, through :func:`index_protocol.erase_everywhere`
     (pruned deletes, pruned self-audit, leaked must be 0). A table's
     erase key resolves from its manifest's ``stats_col`` (falling
     back to ``bloom_col`` — either opt-in marks the column the table
@@ -881,8 +864,7 @@ def erase_by_names(
         order[rec["path"]] = rec["name"]
     acct = erase_everywhere(
         spark, deleted_ids, index_paths, table_specs,
-        fingerprint=fingerprint, deleted_rows=deleted_rows,
-        text_col=text_col, vec_col=vec_col, table_mode=table_mode,
+        fingerprint=fingerprint, table_mode=table_mode,
         index_mode=index_mode,
     )
     return [{**a, "name": order[a["target"]]} for a in acct]
@@ -1067,7 +1049,7 @@ def catalog_maintenance_tick(
         vacuum,
     )
 
-    from uts_spark.functions.index_protocol import _detect_index_protocol
+    from uts_spark.functions.index_protocol import _family_config
 
     entries = list_entries(catalog)
     views = [r for r in entries if r["kind"] == "view"]
@@ -1110,25 +1092,10 @@ def catalog_maintenance_tick(
             "orphans_removed": 0,
         }
         if rec["kind"] == "index":
-            # marker-protocol indexes are partitioned layouts, not
-            # manifest chains — the versioned-table chores don't
-            # apply (their compaction is the partition-grain
-            # compact_partitioned, a deliberate operator call, and
-            # their file censuses make orphan cleanup a different
-            # verb). Skip LOUDLY in the report, never guess.
-            if _detect_index_protocol(rec["path"]) != "snapshot":
-                r["skipped"] = (
-                    "marker-protocol index (compact via "
-                    "index_protocol.index_compact)"
-                )
-                # a policy recorded before the entry became (or was
-                # registered as) marker-protocol is NOT enforced by
-                # this tick — say so, never let the operator believe
-                # a compliance window is active (ADVICE r10, low)
-                if rec.get("retention"):
-                    r["retention_unenforced"] = rec["retention"]
-                report.append(r)
-                continue
+            # a path without a snapshot manifest chain has no chores
+            # this tick can run — raise (naming vindex_migrate) rather
+            # than skip it and let the operator believe it is maintained
+            _family_config(rec["path"])
             from uts_spark.functions.vindex import vindex_maybe_materialize
 
             r["dv_materialized"] = vindex_maybe_materialize(
